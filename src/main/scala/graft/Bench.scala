@@ -1682,7 +1682,7 @@ object Bench {
   }
 
   /** Streaming KPI-pipeline throughput: drain a generated airline
-    * segment directory through the single-scan fan-out (all six KPI
+    * segment directory through the single-scan fan-out (all eight KPI
     * tables, checkpointed, idempotent upsert sink) and report rows/s.
     * The reference's design envelope was ~1000 rows/s
     * (reference: src/main/scala/Producer.scala:46 — 1000-row segments

@@ -58,7 +58,10 @@ object GraftSession {
     // cache — the r18 pageRank loop paid one full edge-frame exchange
     // PER ITERATION for exactly this reason (plans/r18/
     // x38_pagerank_{before,after}.txt). Scale-independent semantics:
-    // the same plan shape is the win on a cluster.
+    // the same plan shape is the win on a cluster. Trade-off: AQE may
+    // now change a cache's output partitioning, so consumers of caches
+    // persisted without an explicit repartition (KpiStream's coalesced
+    // batch, for one) may pay an extra read-side shuffle.
     spark.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     // HOF→native rewrite (VectorDotRewrite) — idempotent install so

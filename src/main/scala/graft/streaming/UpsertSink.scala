@@ -1,8 +1,11 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Keyed upsert sinks for streaming `foreachBatch` fan-out — the engine's
   * replacement for the reference's per-row MySQL upsert writer
@@ -13,13 +16,31 @@ import org.apache.spark.sql.functions._
   *  - [[ParquetKpiStore]]: versioned parquet directories with an atomic
   *    latest-pointer — the test/local sink. Merge is an *additive* fold of
   *    keyed components (counts/sums), idempotent under micro-batch replay
-  *    via a persisted applied-batch watermark (exactly-once effect on
-  *    at-least-once delivery).
+  *    via a persisted per-table applied-batch watermark (exactly-once
+  *    effect on at-least-once delivery).
   *  - [[JdbcUpsertSink]]: batched, pooled-connection keyed upsert for
   *    external DBMS targets — `addBatch`/`executeBatch` per partition
   *    instead of per-row round trips.
+  *
+  * Concurrency: [[ParquetKpiStore]] locks per table, not per store.
+  * Merges into different tables run at the same time (the KPI fan-out
+  * starts all of one batch's merges together); merges into the same
+  * table serialize, so each reads the version its predecessor wrote.
+  * Group commits hold every member's lock, and the group's own, taken
+  * in sorted name order so that no two writers can deadlock.
   */
 class ParquetKpiStore(root: String) extends Serializable {
+
+  @transient private lazy val locks = new ConcurrentHashMap[String, AnyRef]()
+
+  /** Run `body` holding the lock of every name, taken in sorted order. */
+  private def locked[A](names: Seq[String])(body: => A): A = {
+    def hold(rest: List[String]): A = rest match {
+      case Nil => body
+      case n :: more => locks.computeIfAbsent(n, _ => new AnyRef).synchronized(hold(more))
+    }
+    hold(names.distinct.sorted.toList)
+  }
 
   private def tableDir(table: String) = s"$root/$table"
   private def latestFile(table: String) = new Path(s"$root/$table/_LATEST")
@@ -52,27 +73,36 @@ class ParquetKpiStore(root: String) extends Serializable {
   def read(spark: SparkSession, table: String): Option[DataFrame] =
     currentVersionPath(spark, table).map(spark.read.parquet(_))
 
+  /** Current table contents read with a known schema. Unlike [[read]],
+    * this fires no Spark job: the Parquet footer inference is skipped. */
+  private[graft] def readAs(
+      spark: SparkSession, table: String, schema: StructType): Option[DataFrame] =
+    currentVersionPath(spark, table).map(spark.read.schema(schema).parquet(_))
+
   /** Additively merge keyed components: non-key numeric columns are summed
     * per key across the existing state and the new batch. Skips batches
-    * already applied (replay after checkpoint recovery is a no-op). */
+    * already applied (replay after checkpoint recovery is a no-op). Every
+    * version of the table was written with the updates' schema, so the
+    * current one is read with it. */
   def merge(
       spark: SparkSession,
       table: String,
       keys: Seq[String],
       updates: DataFrame,
-      batchId: Long): Unit = synchronized {
-    if (batchId <= appliedBatch(spark, table)) return // idempotent replay
-    val valueCols = updates.columns.filterNot(keys.contains)
-    val merged = read(spark, table) match {
-      case None => updates
-      case Some(cur) =>
-        cur.unionByName(updates)
-          .groupBy(keys.map(col): _*)
-          .agg(valueCols.head -> "sum", valueCols.tail.map(_ -> "sum"): _*)
-          .select(keys.map(col) ++ valueCols.map(c => col(s"sum($c)").cast(
-            updates.schema(c).dataType).as(c)): _*)
+      batchId: Long): Unit = locked(Seq(table)) {
+    if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
+      val valueCols = updates.columns.filterNot(keys.contains)
+      val merged = readAs(spark, table, updates.schema) match {
+        case None => updates
+        case Some(cur) =>
+          cur.unionByName(updates)
+            .groupBy(keys.map(col): _*)
+            .agg(valueCols.head -> "sum", valueCols.tail.map(_ -> "sum"): _*)
+            .select(keys.map(col) ++ valueCols.map(c => col(s"sum($c)").cast(
+              updates.schema(c).dataType).as(c)): _*)
+      }
+      writeVersion(spark, table, merged, batchId)
     }
-    writeVersion(spark, table, merged, batchId)
   }
 
   /** Keyed LAST-WRITE-WINS merge: an updated key's row REPLACES the
@@ -90,15 +120,16 @@ class ParquetKpiStore(root: String) extends Serializable {
       table: String,
       keys: Seq[String],
       updates: DataFrame,
-      batchId: Long): Unit = synchronized {
-    if (batchId <= appliedBatch(spark, table)) return // idempotent replay
-    val merged = read(spark, table) match {
-      case None => updates
-      case Some(cur) =>
-        cur.join(updates.select(keys.map(col): _*), keys, "left_anti")
-          .unionByName(updates)
+      batchId: Long): Unit = locked(Seq(table)) {
+    if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
+      val merged = read(spark, table) match {
+        case None => updates
+        case Some(cur) =>
+          cur.join(updates.select(keys.map(col): _*), keys, "left_anti")
+            .unionByName(updates)
+      }
+      writeVersion(spark, table, merged, batchId)
     }
-    writeVersion(spark, table, merged, batchId)
   }
 
   /** Keyed ALGEBRAIC merge — the generalization the additive [[merge]]
@@ -116,13 +147,14 @@ class ParquetKpiStore(root: String) extends Serializable {
       spark: SparkSession,
       table: String,
       updates: DataFrame,
-      batchId: Long)(combine: DataFrame => DataFrame): Unit = synchronized {
-    if (batchId <= appliedBatch(spark, table)) return // idempotent replay
-    val merged = read(spark, table) match {
-      case None => updates
-      case Some(cur) => combine(cur.unionByName(updates))
+      batchId: Long)(combine: DataFrame => DataFrame): Unit = locked(Seq(table)) {
+    if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
+      val merged = read(spark, table) match {
+        case None => updates
+        case Some(cur) => combine(cur.unionByName(updates))
+      }
+      writeVersion(spark, table, merged, batchId)
     }
-    writeVersion(spark, table, merged, batchId)
   }
 
   /** Shared version-write tail: new version dir, atomic pointer swap,
@@ -188,27 +220,30 @@ class ParquetKpiStore(root: String) extends Serializable {
       spark: SparkSession,
       group: String,
       members: Seq[(String, Seq[String], DataFrame)],
-      batchId: Long): Unit = synchronized {
+      batchId: Long): Unit = {
     require(members.nonEmpty, "mergeGroup needs at least one member table")
-    if (batchId <= appliedGroupBatch(spark, group)) return // idempotent replay
-    members.foreach { case (table, keys, updates) =>
-      val valueCols = updates.columns.filterNot(keys.contains)
-      val merged = readGrouped(spark, group, table) match {
-        case None => updates
-        case Some(cur) =>
-          cur.unionByName(updates)
-            .groupBy(keys.map(col): _*)
-            .agg(valueCols.head -> "sum", valueCols.tail.map(_ -> "sum"): _*)
-            .select(keys.map(col) ++ valueCols.map(c => col(s"sum($c)").cast(
-              updates.schema(c).dataType).as(c)): _*)
+    groupLocked(group, members.map(_._1)) {
+      if (batchId > appliedGroupBatch(spark, group)) { // else: idempotent replay
+        members.foreach { case (table, keys, updates) =>
+          val valueCols = updates.columns.filterNot(keys.contains)
+          val merged = readGrouped(spark, group, table) match {
+            case None => updates
+            case Some(cur) =>
+              cur.unionByName(updates)
+                .groupBy(keys.map(col): _*)
+                .agg(valueCols.head -> "sum", valueCols.tail.map(_ -> "sum"): _*)
+                .select(keys.map(col) ++ valueCols.map(c => col(s"sum($c)").cast(
+                  updates.schema(c).dataType).as(c)): _*)
+          }
+          merged.write.mode(SaveMode.Overwrite)
+            .parquet(s"${tableDir(table)}/v_$batchId")
+        }
+        // every member staged — ONE atomic swap commits the generation
+        writeGroupManifestAtomic(spark, group, batchId)
+        members.foreach { case (table, _, _) =>
+          pruneOldVersions(spark, table, batchId)
+        }
       }
-      merged.write.mode(SaveMode.Overwrite)
-        .parquet(s"${tableDir(table)}/v_$batchId")
-    }
-    // every member staged — ONE atomic swap commits the generation
-    writeGroupManifestAtomic(spark, group, batchId)
-    members.foreach { case (table, _, _) =>
-      pruneOldVersions(spark, table, batchId)
     }
   }
 
@@ -229,18 +264,26 @@ class ParquetKpiStore(root: String) extends Serializable {
       spark: SparkSession,
       group: String,
       members: Seq[(String, DataFrame)],
-      batchId: Long): Unit = synchronized {
+      batchId: Long): Unit = {
     require(members.nonEmpty, "commitGroup needs at least one member table")
-    if (batchId <= appliedGroupBatch(spark, group)) return // idempotent replay
-    members.foreach { case (table, next) =>
-      next.write.mode(SaveMode.Overwrite)
-        .parquet(s"${tableDir(table)}/v_$batchId")
-    }
-    writeGroupManifestAtomic(spark, group, batchId)
-    members.foreach { case (table, _) =>
-      pruneOldVersions(spark, table, batchId)
+    groupLocked(group, members.map(_._1)) {
+      if (batchId > appliedGroupBatch(spark, group)) { // else: idempotent replay
+        members.foreach { case (table, next) =>
+          next.write.mode(SaveMode.Overwrite)
+            .parquet(s"${tableDir(table)}/v_$batchId")
+        }
+        writeGroupManifestAtomic(spark, group, batchId)
+        members.foreach { case (table, _) =>
+          pruneOldVersions(spark, table, batchId)
+        }
+      }
     }
   }
+
+  /** A group commit holds its members' locks and the group manifest's
+    * (named as its file, which no table can be). */
+  private def groupLocked[A](group: String, tables: Seq[String])(body: => A): A =
+    locked(s"_GROUP_$group" +: tables)(body)
 
   /** The group manifest swap — same two-path atomic rename as
     * [[writePointerAtomic]], on the group file. */

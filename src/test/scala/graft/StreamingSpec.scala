@@ -33,6 +33,31 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("KPI fan-out: a merge failing mid-batch replays from the checkpoint to exactly-once state") {
+    val in = tmpDir("replay-in"); val cp = tmpDir("replay-cp"); val st = tmpDir("replay-store")
+    writeSegments(in, 3, 40)
+    val store = new FailOnceStore(st, "loyalty_by_age", 1L)
+    def run() = KpiStream.start(spark, s"$in/*", cp, store,
+      availableNow = true, maxFilesPerTrigger = Some(1)).awaitTermination()
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == FailOnceStore.Message), err.toString)
+    // the failure surfaced only after the overlapping merges had finished:
+    // every other table holds batch 1, the failed one still batch 0
+    AirlineKpis.all.foreach { case (table, _, _) =>
+      val want = if (table == "loyalty_by_age") 0L else 1L
+      assert(store.appliedBatch(spark, table) == want, s"$table after the failed batch")
+    }
+    run() // restart: batch 1 replays, the watermark skips the folded tables
+    val batch = graft.sources.Tables.airlineCsv(spark, s"$in/*")
+    AirlineKpis.all.foreach { case (table, transform, keys) =>
+      assert(store.appliedBatch(spark, table) == 2L, s"$table after the restart")
+      val want = transform(batch).orderBy(keys.map(col): _*).collect().toSeq
+      val got = store.read(spark, table).get.orderBy(keys.map(col): _*).collect().toSeq
+      assert(got == want, s"KPI $table mismatch after replay")
+    }
+  }
+
   test("K8 streams as components; derived flight-distance mean == batch KPI") {
     val in = tmpDir("k8-in"); val cp = tmpDir("k8-cp"); val st = tmpDir("k8-store")
     writeSegments(in, 3, 40)
@@ -97,29 +122,104 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     val st = tmpDir("atomic-store")
     val store = new ParquetKpiStore(st)
-    store.merge(spark, "t", Seq("k"), Seq(("a", 1L)).toDF("k", "Count"), 0L)
+    val distinct = (0 until 4).map(i => s"d$i")
+    val tables = "t" +: "pair" +: distinct
+    def one(v: Long) = Seq(("a", v)).toDF("k", "Count")
+    def valueOf(table: String) = store.read(spark, table).get.as[(String, Long)].head()._2
+    tables.foreach(t => store.merge(spark, t, Seq("k"), one(1L), 0L))
     @volatile var stop = false
     @volatile var bad: Option[String] = None
     // reader races every merge's pointer swap; with create-overwrite it
     // could catch a truncated/empty _LATEST — with rename it cannot
     val reader = new Thread(() => {
       while (!stop && bad.isEmpty) {
-        try {
-          if (store.appliedBatch(spark, "t") < 0L)
-            bad = Some("reader observed a missing/empty pointer")
-        } catch { case e: Throwable => bad = Some(s"reader failed: $e") }
+        tables.foreach { t =>
+          try {
+            if (store.appliedBatch(spark, t) < 0L)
+              bad = Some(s"reader observed a missing/empty pointer on $t")
+          } catch { case e: Throwable => bad = Some(s"reader failed on $t: $e") }
+        }
       }
     })
+    def inThreads(bodies: Seq[() => Unit]): Unit = {
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val ts = bodies.map(b => new Thread(() => try b() catch { case e: Throwable => errors.add(e) }))
+      ts.foreach(_.start()); ts.foreach(_.join())
+      assert(errors.isEmpty, errors.toString)
+    }
     reader.start()
     (1 to 10).foreach { i =>
-      store.merge(spark, "t", Seq("k"), Seq(("a", 1L)).toDF("k", "Count"), i.toLong)
+      store.merge(spark, "t", Seq("k"), one(1L), i.toLong)
+    }
+    // distinct tables merge at once: each ends where a sequential run would
+    inThreads(distinct.map(t => () =>
+      (1 to 5).foreach(b => store.merge(spark, t, Seq("k"), one(1L), b.toLong))))
+    // one table, two threads, different batch ids: the merges serialize, so
+    // each round ends in a sequential outcome — both applied (+101), or
+    // the higher id first and the lower one skipped as a replay (+100);
+    // a lost update (both folding the same base version) would show +1
+    (0 until 4).foreach { r =>
+      val before = valueOf("pair")
+      val (lo, hi) = (2L * r + 1, 2L * r + 2)
+      inThreads(Seq(
+        () => store.merge(spark, "pair", Seq("k"), one(1L), lo),
+        () => store.merge(spark, "pair", Seq("k"), one(100L), hi)))
+      val delta = valueOf("pair") - before
+      assert(delta == 101L || delta == 100L, s"round $r: pair grew by $delta")
+      assert(store.appliedBatch(spark, "pair") == hi)
     }
     stop = true
     reader.join()
     assert(bad.isEmpty, bad.getOrElse(""))
     assert(store.appliedBatch(spark, "t") == 10L)
+    distinct.foreach { t =>
+      assert(store.appliedBatch(spark, t) == 5L)
+      assert(valueOf(t) == 6L, s"$t lost a concurrent merge")
+    }
     // no leftover temp file once the swap completes
-    assert(!new java.io.File(s"$st/t/_LATEST.tmp").exists())
+    tables.foreach(t => assert(!new java.io.File(s"$st/$t/_LATEST.tmp").exists()))
+  }
+
+  test("ParquetKpiStore merge resolves an existing table's current version without a Spark job") {
+    import spark.implicits._
+    val phase = "graft.test.phase"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(phase)))
+          .foreach(jobs.merge(_, 1, _ + _))
+    }
+    def during[A](name: String)(body: => A): A = {
+      spark.sparkContext.setLocalProperty(phase, name)
+      try body finally spark.sparkContext.setLocalProperty(phase, null)
+    }
+    // merge's own resolution step, observed through the real merge path
+    val resolutions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val store = new ParquetKpiStore(tmpDir("jobs-store")) {
+      override private[graft] def readAs(
+          s: org.apache.spark.sql.SparkSession, table: String,
+          schema: org.apache.spark.sql.types.StructType) = {
+        resolutions.incrementAndGet()
+        during("resolve")(super.readAs(s, table, schema))
+      }
+    }
+    store.merge(spark, "t", Seq("k"), Seq(("a", 2L)).toDF("k", "Count"), 0L)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      store.merge(spark, "t", Seq("k"), Seq(("a", 3L)).toDF("k", "Count"), 1L)
+      // the public read still infers the schema: the listener sees that job
+      during("read")(store.read(spark, "t"))
+      // events arrive in order: once this job is seen, every earlier one is
+      during("sentinel")(spark.sparkContext.parallelize(Seq(1), 1).count())
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.containsKey("sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(jobs.containsKey("sentinel"), "listener never saw the sentinel job")
+      assert(jobs.getOrDefault("read", 0) >= 1, s"inference job not observed: $jobs")
+      assert(resolutions.get() == 2, "merge did not resolve its version through readAs")
+      assert(jobs.getOrDefault("resolve", 0) == 0, s"merge's version read fired jobs: $jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(store.read(spark, "t").get.as[(String, Long)].collect().toSeq == Seq(("a", 5L)))
   }
 
   test("maxFilesPerTrigger bounds micro-batch size (backpressure knob)") {
@@ -1754,4 +1854,20 @@ class StreamingSpec extends SparkTestBase {
     val dc3 = pc(8L, Iterator((8L, Ev(day + 150L, 9L, "click"))), s2).toSet
     assert(dc3 == Set(ADelta(0L, 1L, 0L, 0L, true)))
   }
+}
+
+/** A store whose merge of `table` throws once, for batch `batchId`. */
+private class FailOnceStore(root: String, table: String, batchId: Long)
+    extends ParquetKpiStore(root) {
+  private val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+  override def merge(spark: org.apache.spark.sql.SparkSession, t: String, keys: Seq[String],
+      updates: DataFrame, b: Long): Unit = {
+    if (t == table && b == batchId && armed.compareAndSet(true, false))
+      throw new IllegalStateException(FailOnceStore.Message)
+    super.merge(spark, t, keys, updates, b)
+  }
+}
+
+private object FailOnceStore {
+  val Message = "injected merge failure"
 }
