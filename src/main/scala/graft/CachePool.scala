@@ -16,9 +16,16 @@ import org.apache.spark.sql.DataFrame
   * session's lifetime — measured in round 4 as a multi-× slowdown of
   * later queries sharing the session).
   *
-  * `releaseAll` is idempotent and safe while consumers are still lazy:
-  * unpersisting only drops the cached blocks; any plan that still
-  * references the frame recomputes it from lineage.
+  * `releaseAll` is idempotent. What a still-lazy consumer sees after it
+  * depends on how the frame was registered:
+  *
+  *  - [[register]] / [[registerEager]]: unpersisting only drops the
+  *    cached blocks; a plan that still references the frame recomputes
+  *    it from lineage;
+  *  - [[registerLocalCheckpoint]]: the checkpoint's blocks ARE the data
+  *    (its lineage was cut), so a consumer run after the release fails
+  *    with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`. Release only once every
+  *    consumer of such a frame has run.
   */
 object CachePool {
 
@@ -94,7 +101,11 @@ object CachePool {
     * prevent). The persistent-RDD diff is taken inside the pool lock:
     * concurrent pool users cannot interleave, and any non-pool RDD a
     * racing persist lands in the window is merely unpersisted at the
-    * same pipeline boundary releaseAll already clears. */
+    * same pipeline boundary releaseAll already clears.
+    *
+    * The returned frame has no lineage to fall back on: after
+    * [[releaseAll]] any plan over it fails loudly instead of
+    * recomputing, so every consumer must run before the release. */
   def registerLocalCheckpoint(df: DataFrame): DataFrame = synchronized {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -111,7 +122,9 @@ object CachePool {
 
   /** Unpersist every tracked frame and checkpoint RDD and clear the
     * registry. Failures on individual entries (e.g. a stopped session)
-    * never mask the rest. */
+    * never mask the rest. Consumers of a [[register]]ed frame recompute
+    * it afterwards; consumers of a [[registerLocalCheckpoint]] frame
+    * fail, because its dropped blocks were its only copy. */
   def releaseAll(blocking: Boolean = false): Unit = synchronized {
     frames.foreach { f =>
       try f.unpersist(blocking)

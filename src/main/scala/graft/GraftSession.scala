@@ -64,6 +64,18 @@ object GraftSession {
     // batch, for one) may pay an extra read-side shuffle.
     spark.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // local mode lists files on the driver: above 32 paths Spark's file
+    // index lists them with a Spark job, whose tasks on local[N] run on
+    // the driver's own threads against the same disk, so the job only
+    // adds scheduling. A KpiStream trigger paid it twice (4-core host,
+    // local[2]): latestOffset rose from ~100 ms to 0.7-1.3 s once the
+    // `$in/*` glob matched more than 32 segment directories, and a
+    // 100-file burst's getBatch took 0.8-1.3 s instead of 25-64 ms.
+    // A cluster keeps the default, where the job spreads a large
+    // listing over executors.
+    if (spark.sparkContext.isLocal)
+      spark.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
     // HOF→native rewrite (VectorDotRewrite) — idempotent install so
     // user-authored zip_with/aggregate dot products hit the codegen path
     if (!spark.experimental.extraOptimizations.contains(graft.plans.VectorDotRewrite)) {

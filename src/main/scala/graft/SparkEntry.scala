@@ -6250,7 +6250,10 @@ object SparkEntry {
   private val j28Q21Shape = (s: SparkSession, d: String) => {
     // three consumers: the late left side, l2, l3 — ALL of them join on
     // l_orderkey, so the staged fact is hash-partitioned on it before
-    // the persist (guide §2.4): with cached-plan partitioning visible
+    // the persist (guide §2.4). At bench scale all three consumers
+    // broadcast (plans/r18/j28_q21_shape_after.txt), so the partitioning
+    // is latent and costs one build-time exchange. It is sized for the
+    // sort-merge regime: there, with cached-plan partitioning visible
     // (GraftSession.tune), the semi/anti joins reuse the one exchange
     // instead of re-shuffling the cache per consumer
     val l = CachePool.register(t(s, d, "lineitem")

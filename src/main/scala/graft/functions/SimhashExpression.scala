@@ -36,7 +36,9 @@ case class SimhashFromTokenArray(child: Expression)
   // analysis-time type check: misuse on a non-array<string> column
   // fails in the analyzer, not as a runtime ClassCastException
   // (ExpectsInputTypes/AbstractDataType are private[sql] in Spark 4,
-  // so the check is a checkInputDataTypes override)
+  // so the check is a checkInputDataTypes override). Untyped literals
+  // such as array() or array(null) are array<void> and are rejected
+  // too, on purpose (TextDedupSpec pins it)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(

@@ -119,12 +119,14 @@ object Graph {
     // for the whole loop — the only corpus-width frame in play. It is
     // hash-partitioned AND sorted on the join key BEFORE the persist
     // (guide §2.4: two operations keyed the same way share one
-    // exchange): the cached partitioning/ordering satisfies every
-    // round's sort-merge join, so the per-round plan exchanges only
-    // the |V|-row rank vector — without this the r17 plans re-shuffled
-    // AND re-sorted the edge frame on every iteration (Exchange+Sort
-    // above the cache scan, 5x at the registry budget; at 100 TB that
-    // is five full edge-list shuffles instead of zero).
+    // exchange). The static plan does not show the saving:
+    // plans/r18/x38_pagerank_after.txt still has Exchange+Sort above
+    // every cache scan, as the r17 before-plan did. Only at AQE run
+    // time does the cached partitioning/ordering satisfy each round's
+    // sort-merge join, so the executed rounds exchange only the
+    // |V|-row rank vector instead of re-shuffling and re-sorting the
+    // edge frame (5x at the registry budget; at 100 TB five full
+    // edge-list shuffles instead of zero).
     val edDeg = CachePool.register(
       ed.join(deg, Seq("_s"))
         .repartition(col("_s")).sortWithinPartitions(col("_s"))

@@ -94,7 +94,13 @@ object Tables {
 
   /** Streaming CSV file source over a segment-directory glob
     * (reference: Consumer.scala:49-52). `maxFilesPerTrigger` bounds
-    * micro-batch size — the backpressure knob absent in the reference. */
+    * micro-batch size — the backpressure knob absent in the reference.
+    *
+    * A trigger lists the source twice: the glob in `latestOffset` and
+    * the batch's new files in `getBatch`. On a session passed through
+    * [[graft.GraftSession.tune]] in local mode both are driver-side
+    * listings, however many segment directories or files they cover,
+    * not Spark listing jobs. */
   def airlineCsvStream(
       spark: SparkSession,
       glob: String,

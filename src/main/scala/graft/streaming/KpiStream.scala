@@ -37,6 +37,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    under the same id, and each table's applied-batch watermark skips
   *    the tables that batch already reached. A partial, overlapping
   *    fan-out therefore still gives exactly-once effects end-to-end;
+  *  - the source's own cost per trigger is two file listings, the glob
+  *    in `latestOffset` and the new files in `getBatch`. In local mode
+  *    [[graft.GraftSession.tune]] makes both driver-side listings, not
+  *    Spark jobs; without it each listing of more than 32 paths is a
+  *    job (measured cost in `GraftSession.tune`);
   *  - batch ids are consistent across all KPI tables by construction
   *    (single query), which the reference's five independent queries could
   *    not guarantee.

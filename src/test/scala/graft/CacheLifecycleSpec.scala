@@ -64,6 +64,20 @@ class CacheLifecycleSpec extends SparkTestBase {
     assert(pairs.count() == before, "lazy plans survive the unpersist")
   }
 
+  test("a released local checkpoint has no lineage: its lazy consumers fail loudly, never recompute") {
+    CachePool.releaseAll()
+    val cp = CachePool.registerLocalCheckpoint(
+      spark.range(0, 1000, 1, 4).select((col("id") % 7).as("k")))
+    assert(cp.count() == 1000L)
+    // built before the release, first run after it
+    val consumer = cp.groupBy(col("k")).count()
+    CachePool.releaseAll(blocking = true)
+    val err = intercept[Exception](consumer.collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")),
+      s"expected the checkpoint-block failure, got $err")
+  }
+
   test("source sweep: persist sites never outnumber release sites in any file") {
     // per-SITE accounting, not per-file presence: a file that already
     // releases one frame must not absolve a new leaky persist() added to

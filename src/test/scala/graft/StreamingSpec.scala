@@ -222,6 +222,51 @@ class StreamingSpec extends SparkTestBase {
     assert(store.read(spark, "t").get.as[(String, Long)].collect().toSeq == Seq(("a", 5L)))
   }
 
+  test("tuned local session lists a >32-directory segment stream on the driver: no listing jobs") {
+    val in = tmpDir("list-in")
+    writeSegments(in, 40, 5) // 40 segment directories: over Spark's 32-path job threshold
+    val listingJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinels = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (desc.exists(_.startsWith("Listing leaf files and directories")))
+          listingJobs.incrementAndGet()
+        if (desc.contains("graft.test.sentinel")) sentinels.incrementAndGet()
+      }
+    }
+    // drains the whole stream in one session; returns its listing-job count
+    def drain(session: org.apache.spark.sql.SparkSession, store: ParquetKpiStore): Int = {
+      listingJobs.set(0)
+      val seen = sentinels.get()
+      KpiStream.runToCompletion(session, s"$in/*", tmpDir("list-cp"), store)
+      // listener events arrive in order: once the sentinel is seen, every earlier job is
+      session.sparkContext.setJobDescription("graft.test.sentinel")
+      try session.sparkContext.parallelize(Seq(1), 1).count()
+      finally session.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (sentinels.get() == seen && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(sentinels.get() > seen, "listener never saw the sentinel job")
+      listingJobs.get()
+    }
+    val tuned = GraftSession.tune(spark.newSession())
+    val store = new ParquetKpiStore(tmpDir("list-store"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // control: the untuned session lists the glob and the 40-file batch with jobs
+      val untunedJobs = drain(spark.newSession(), new ParquetKpiStore(tmpDir("list-store-ctl")))
+      assert(untunedJobs >= 1, "control: an untuned session fired no listing job, so this spec cannot fail")
+      val tunedJobs = drain(tuned, store)
+      assert(tunedJobs == 0, s"tuned session fired $tunedJobs listing jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val batch = graft.sources.Tables.airlineCsv(tuned, s"$in/*")
+    AirlineKpis.all.foreach { case (table, transform, keys) =>
+      val want = transform(batch).orderBy(keys.map(col): _*).collect().toSeq
+      val got = store.read(tuned, table).get.orderBy(keys.map(col): _*).collect().toSeq
+      assert(got == want, s"KPI $table mismatch")
+    }
+  }
+
   test("maxFilesPerTrigger bounds micro-batch size (backpressure knob)") {
     val in = tmpDir("bp-in"); val cp = tmpDir("bp-cp"); val st = tmpDir("bp-store")
     writeSegments(in, 4, 20)

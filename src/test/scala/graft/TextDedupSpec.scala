@@ -398,6 +398,15 @@ class TextDedupSpec extends SparkTestBase {
     }
   }
 
+  test("simhash: an untyped array() literal fails at analysis, not at run time") {
+    // array() is array<void>, not array<string>: rejected deliberately,
+    // with no implicit cast to widen it
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(1).select(Dedup.simhashFromTokens(array())))
+    assert(err.getMessage.contains("simhash_from_tokens requires array<string> input"),
+      err.getMessage)
+  }
+
   test("simhash: near-identical texts within small hamming distance, unrelated far") {
     val df = Seq(
       (1L, "spark makes distributed data processing simple and fast for everyone"),
