@@ -59,9 +59,9 @@ object GraftSession {
     // PER ITERATION for exactly this reason (plans/r18/
     // x38_pagerank_{before,after}.txt). Scale-independent semantics:
     // the same plan shape is the win on a cluster. Trade-off: AQE may
-    // now change a cache's output partitioning, so consumers of caches
-    // persisted without an explicit repartition (KpiStream's coalesced
-    // batch, for one) may pay an extra read-side shuffle.
+    // now change a cache's output partitioning, so keyed consumers of a
+    // cache persisted without an explicit repartition may pay an extra
+    // read-side shuffle.
     spark.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     // local mode lists files on the driver: above 32 paths Spark's file

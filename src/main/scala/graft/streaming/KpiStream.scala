@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.airline.AirlineKpis
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The streaming KPI pipeline: ONE source scan, ONE query, fan-out to all
@@ -16,20 +16,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Consumer.scala:60-107).
   *
   * Design:
-  *  - each micro-batch is coalesced to the session's default parallelism,
-  *    persisted once and built by one job before the fan-out. A
-  *    file-stream batch carries one partition per small CSV file, so a
-  *    100-file trigger would otherwise schedule every KPI aggregation
-  *    over 100 partitions; `coalesce` narrows without a shuffle and never
-  *    adds partitions;
-  *  - every KPI aggregates the cached batch into keyed *additive
-  *    components* (counts / sums), merged into the store; running totals
-  *    therefore live in the sink, not in unbounded streaming state — at
-  *    100 TB the state store never grows, and the shuffles are
-  *    per-batch-sized, not stream-lifetime-sized;
+  *  - one aggregation per trigger: the micro-batch is coalesced to the
+  *    session's default parallelism and [[AirlineKpis.fusedComponents]]
+  *    computes every KPI table's keyed *additive components* (counts /
+  *    sums) in a single group-by. A file-stream batch carries one
+  *    partition per small CSV file, so a 100-file trigger would otherwise
+  *    schedule the scan over 100 partitions; `coalesce` narrows without a
+  *    shuffle and never adds partitions;
+  *  - the result, bounded by the key domain (3,136 rows for a 100k-row
+  *    burst of the airline fixture), is collected once and wrapped as a
+  *    local DataFrame; each table's merge gets its projection of it. The
+  *    batch is scanned once, inside that aggregation, so nothing is
+  *    cached and the source's `numInputRows` counts every row once;
+  *  - running totals live in the sink, not in unbounded streaming state:
+  *    the store sums the components — at 100 TB the state store never
+  *    grows, and the shuffle is per-batch-sized, not
+  *    stream-lifetime-sized;
   *  - the per-table merges of one batch run concurrently (the store
-  *    locks per table, so they do not serialize on each other), and the
-  *    batch is unpersisted only once all of them have finished. One
+  *    locks per table, so they do not serialize on each other). One
   *    merge's failure is rethrown after the others are done, so the
   *    trigger fails with every other table either folded or untouched;
   *  - replay contract: a mandatory checkpoint (the reference configured
@@ -63,11 +67,9 @@ object KpiStream {
       .queryName("graft_kpi_fanout")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = persistCoalesced(spark, batch)
-        try runAll(AirlineKpis.all.map { case (table, transform, keys) =>
-          () => store.merge(spark, table, keys, transform(cached), batchId)
-        }) finally cached.unpersist()
-        ()
+        runAll(components(spark, batch).map { case (table, updates, keys) =>
+          () => store.merge(spark, table, keys, updates, batchId)
+        })
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
      else writer.trigger(Trigger.ProcessingTime("1 second"))).start()
@@ -98,25 +100,25 @@ object KpiStream {
       .queryName("graft_kpi_fanout_jdbc")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = persistCoalesced(spark, batch)
         // sequential: two first merges would race ensureTable into CREATE TABLE graft_applied_batches
-        try AirlineKpis.all.foreach { case (table, transform, keys) =>
-          store.merge(table, keys, transform(cached), batchId)
-        } finally cached.unpersist()
-        ()
+        components(spark, batch).foreach { case (table, updates, keys) =>
+          store.merge(table, keys, updates, batchId)
+        }
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
      else writer.trigger(Trigger.ProcessingTime("1 second"))).start()
   }
 
-  /** The micro-batch narrowed to the default parallelism, persisted and
-    * built by one job. Built here because AQE otherwise submits a
-    * cache-building stage from every concurrent merge that finds the
-    * cache still empty. */
-  private def persistCoalesced(spark: SparkSession, batch: DataFrame): DataFrame = {
-    val cached = batch.coalesce(spark.sparkContext.defaultParallelism).persist()
-    cached.foreachPartition((_: Iterator[Row]) => ())
-    cached
+  /** Every KPI table's components of `batch` as (table, local DataFrame,
+    * upsert keys): the coalesced batch is aggregated by one fused pass and
+    * its key-bounded result collected once, so the merges fire no job
+    * against the batch. */
+  private def components(
+      spark: SparkSession, batch: DataFrame): Seq[(String, DataFrame, Seq[String])] = {
+    val fused = AirlineKpis.fusedComponents(
+      batch.coalesce(spark.sparkContext.defaultParallelism))
+    AirlineKpis.splitComponents(
+      spark.createDataFrame(fused.collect().toSeq.asJava, fused.schema))
   }
 
   /** Runs every task on a thread of its own and waits for all of them;

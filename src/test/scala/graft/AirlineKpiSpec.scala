@@ -1,6 +1,6 @@
 package graft
 
-import graft.airline.AirlineKpis
+import graft.airline.{AirlineFixture, AirlineKpis}
 import org.apache.spark.sql.functions._
 
 class AirlineKpiSpec extends SparkTestBase {
@@ -56,5 +56,39 @@ class AirlineKpiSpec extends SparkTestBase {
     val got = AirlineKpis.flightDistanceImpact(d2)
     assert(got.columns.toSeq == Seq("flight_distance", "mean_satisfaction"))
     assert(got.count() == 2)
+  }
+
+  test("fused components == every AirlineKpis.all transform, table by table, nulls included") {
+    import AirlineFixture.{csvLine, header}
+    // csv field positions: Gender, Customer Type, Age, Type of Travel, Class,
+    // Flight Distance, the rating "Seat comfort", satisfaction
+    val nullable = Seq(1, 2, 3, 4, 5, 6, 13, 23)
+    def blank(line: String, fields: Seq[Int]) = {
+      val f = line.split(",", -1)
+      fields.foreach(f(_) = "")
+      f.mkString(",")
+    }
+    val lines = (0 until 60).map(csvLine) ++
+      nullable.zipWithIndex.map { case (f, j) => blank(csvLine(60 + j), Seq(f)) } :+
+      blank(csvLine(99), nullable)
+    val dir = tmpDir("fused-in")
+    val w = new java.io.PrintWriter(s"$dir/part-0.csv")
+    try { w.println(header); lines.foreach(w.println) } finally w.close()
+    val df = graft.sources.Tables.airlineCsv(spark, dir)
+    nullable.foreach { f =>
+      val c = header.split(",")(f)
+      assert(df.filter(col(s"`$c`").isNull).count() >= 2, s"fixture has no null $c")
+    }
+
+    val split = AirlineKpis.splitComponents(AirlineKpis.fusedComponents(df))
+    assert(split.map(_._1) == AirlineKpis.all.map(_._1))
+    split.zip(AirlineKpis.all).foreach { case ((table, got, gotKeys), (_, transform, keys)) =>
+      val want = transform(df)
+      assert(gotKeys == keys, table)
+      assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)),
+        s"$table schema")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(_.toSeq).sortBy(_.toString)
+      assert(rows(got) == rows(want), s"$table rows")
+    }
   }
 }

@@ -58,6 +58,19 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("KPI fan-out computes each micro-batch once: summed numInputRows == rows landed") {
+    val in = tmpDir("scan-in"); val cp = tmpDir("scan-cp"); val st = tmpDir("scan-store")
+    writeSegments(in, 3, 40)
+    val q = KpiStream.start(spark, s"$in/*", cp, new ParquetKpiStore(st),
+      availableNow = true, maxFilesPerTrigger = Some(1))
+    q.awaitTermination()
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.length == 3, q.recentProgress.map(_.numInputRows).toSeq)
+    // every extra evaluation of a batch's source scan adds its rows again
+    assert(batches.map(_.numInputRows).sum == 3 * 40L,
+      s"numInputRows per batch: ${batches.map(_.numInputRows).toSeq}")
+  }
+
   test("K8 streams as components; derived flight-distance mean == batch KPI") {
     val in = tmpDir("k8-in"); val cp = tmpDir("k8-cp"); val st = tmpDir("k8-store")
     writeSegments(in, 3, 40)
