@@ -20,7 +20,11 @@ import org.apache.spark.sql.functions._
   * The per-table transforms in [[all]] are the batch reference: the specs
   * and the benchmark's output check compare the streamed store against
   * them. The streaming path computes the same tables from ONE aggregation,
-  * [[fusedComponents]], split per table by [[splitComponents]].
+  * [[fusedComponents]]. Each table is defined once more, as a filter and a
+  * projection of those fused columns ([[views]]): the Parquet store keeps
+  * one state table, [[stateTable]], and reads the eight tables as views of
+  * it, while the JDBC path splits each batch's components per table with
+  * the same strings ([[splitComponents]]).
   */
 object AirlineKpis {
 
@@ -157,39 +161,50 @@ object AirlineKpis {
         sum("_sat").as("sat"))
   }
 
-  /** Table `table` of [[all]] out of [[fusedComponents]]' rows, with the
-    * column names and types of that table's transform. */
-  private def project(table: String, c: DataFrame): DataFrame = {
-    def tagged(tag: String, cols: Column*) =
-      c.filter(col("tag") === tags.indexOf(tag)).select(cols: _*)
-    table match {
-      case "gender_counts" => tagged("gender", col("s1").as("Gender"), col("cnt").as("Count"))
-      case "satisfaction_counts" =>
-        tagged("satisfaction", col("s1").as("satisfaction"), col("cnt").as("Count"))
-      case "satisfaction_by_class" => tagged("class",
-        col("s1").as("Class"), col("s2").as("satisfaction"), col("cnt").as("count"))
-      case "type_travel_counts" =>
-        tagged("travel", col("s1").as("Type_of_Travel"), col("cnt").as("Count"))
-      case "age_distribution" => tagged("age", col("i").as("Age"), col("cnt").as("Count"))
-      case "loyalty_by_age" => tagged("age", col("i").as("Age"),
-        col("loyal").cast("int").as("Loyal_Customer_Count"),
-        (col("ct") - col("loyal")).cast("int").as("Disloyal_Customer_Count"))
-      case "flight_distance_impact" => tagged("distance",
-        col("i").as("flight_distance"), col("sat").as("sat_sum"), col("cnt"))
-      case "mean_satisfaction_by_feature" => c.filter(col("tag") >= keyTags.size).select(
-        element_at(array(tags.map(lit): _*), col("tag") + 1).as("feature_name"),
-        col("i").as("feature_value"), col("sat").as("sat_sum"), col("cnt"))
+  private def tagged(tag: String) = s"tag = ${tags.indexOf(tag)}"
+
+  /** Name of the store's state table: [[fusedComponents]]' rows summed per
+    * key over every batch so far. */
+  val stateTable = "kpi_components"
+
+  /** Upsert keys of [[stateTable]]. */
+  val stateKeys: Seq[String] = Seq("tag", "s1", "s2", "i")
+
+  /** Each table of [[all]] as a view of [[fusedComponents]]' columns:
+    * (name, filter, select), both in SQL text, giving the column names and
+    * types of that table's transform. The store declares these over
+    * [[stateTable]], and [[splitComponents]] applies the same strings to
+    * one batch's components; the A7 feature name is restored from the tag. */
+  val views: Seq[(String, String, Seq[String])] = Seq(
+    ("gender_counts", tagged("gender"), Seq("s1 AS Gender", "cnt AS Count")),
+    ("satisfaction_counts", tagged("satisfaction"), Seq("s1 AS satisfaction", "cnt AS Count")),
+    ("satisfaction_by_class", tagged("class"),
+      Seq("s1 AS Class", "s2 AS satisfaction", "cnt AS count")),
+    ("type_travel_counts", tagged("travel"), Seq("s1 AS Type_of_Travel", "cnt AS Count")),
+    ("age_distribution", tagged("age"), Seq("i AS Age", "cnt AS Count")),
+    ("loyalty_by_age", tagged("age"), Seq("i AS Age",
+      "CAST(loyal AS INT) AS Loyal_Customer_Count",
+      "CAST(ct - loyal AS INT) AS Disloyal_Customer_Count")),
+    ("flight_distance_impact", tagged("distance"),
+      Seq("i AS flight_distance", "sat AS sat_sum", "cnt")),
+    ("mean_satisfaction_by_feature", s"tag >= ${keyTags.size}", Seq(
+      tags.map(t => s"'$t'").mkString("element_at(array(", ", ", "), tag + 1) AS feature_name"),
+      "i AS feature_value", "sat AS sat_sum", "cnt")))
+
+  /** The tables of [[all]], in its order, as (name, components, upsert
+    * keys), projected out of [[fusedComponents]]' output `components` by
+    * [[views]]. */
+  def splitComponents(components: DataFrame): Seq[(String, DataFrame, Seq[String])] = {
+    val byName = views.map(v => v._1 -> v).toMap
+    all.map { case (table, _, keys) =>
+      val (_, filter, select) = byName(table)
+      (table, components.where(filter).selectExpr(select: _*), keys)
     }
   }
 
-  /** The tables of [[all]], in its order, as (name, components, upsert
-    * keys), projected out of [[fusedComponents]]' output `components`. */
-  def splitComponents(components: DataFrame): Seq[(String, DataFrame, Seq[String])] =
-    all.map { case (table, _, keys) => (table, project(table, components), keys) }
-
   /** KPI registry: name → (transform, upsert key columns) — the batch
     * reference for the streamed store (KpiStream computes the same tables
-    * through [[fusedComponents]]). Every transform emits only
+    * through [[fusedComponents]] and [[views]]). Every transform emits only
     * sum-mergeable components. */
   val all: Seq[(String, DataFrame => DataFrame, Seq[String])] = Seq(
     ("gender_counts", genderCounts _, Seq("Gender")),

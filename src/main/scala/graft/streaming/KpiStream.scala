@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
-
 import scala.jdk.CollectionConverters._
 
 import graft.airline.AirlineKpis
@@ -9,11 +7,11 @@ import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The streaming KPI pipeline: ONE source scan, ONE query, fan-out to all
-  * KPI tables inside a single `foreachBatch` — restructuring the
-  * reference's five concurrent `StreamingQuery`s that each re-scanned the
-  * source and kept separate state (reference: src/main/scala/
-  * Consumer.scala:60-107).
+/** The streaming KPI pipeline: ONE source scan, ONE query and ONE store
+  * commit per trigger for all KPI tables — restructuring the reference's
+  * five concurrent `StreamingQuery`s that each re-scanned the source and
+  * kept separate state, and its per-table MySQL upserts (reference:
+  * src/main/scala/Consumer.scala:60-107, 152-181).
   *
   * Design:
   *  - one aggregation per trigger: the micro-batch is coalesced to the
@@ -23,36 +21,42 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    partition per small CSV file, so a 100-file trigger would otherwise
   *    schedule the scan over 100 partitions; `coalesce` narrows without a
   *    shuffle and never adds partitions;
-  *  - the result, bounded by the key domain (3,136 rows for a 100k-row
-  *    burst of the airline fixture), is collected once and wrapped as a
-  *    local DataFrame; each table's merge gets its projection of it. The
-  *    batch is scanned once, inside that aggregation, so nothing is
-  *    cached and the source's `numInputRows` counts every row once;
+  *  - one merge per trigger: the result, bounded by the key domain (3,136
+  *    rows for a 100k-row burst of the airline fixture), is collected once
+  *    and folded by a single [[ParquetKpiStore.merge]] into one state
+  *    table, [[AirlineKpis.stateTable]], keyed on
+  *    [[AirlineKpis.stateKeys]]. The batch is scanned once, inside that
+  *    aggregation, so nothing is cached and the source's `numInputRows`
+  *    counts every row once;
+  *  - the eight KPI tables are views of that state table
+  *    ([[AirlineKpis.views]], declared in the store before the query
+  *    starts), so `store.read` and `store.appliedBatch` still answer per
+  *    table. A commit updates all eight at once, through the state
+  *    table's one pointer swap, and a failed merge updates none. Each
+  *    view read resolves that pointer on its own, so reads of two tables
+  *    can still straddle a commit: a reader that needs all eight at one
+  *    batch reads [[AirlineKpis.stateTable]] once and applies
+  *    [[AirlineKpis.splitComponents]] to that one frame;
   *  - running totals live in the sink, not in unbounded streaming state:
   *    the store sums the components — at 100 TB the state store never
   *    grows, and the shuffle is per-batch-sized, not
   *    stream-lifetime-sized;
-  *  - the per-table merges of one batch run concurrently (the store
-  *    locks per table, so they do not serialize on each other). One
-  *    merge's failure is rethrown after the others are done, so the
-  *    trigger fails with every other table either folded or untouched;
   *  - replay contract: a mandatory checkpoint (the reference configured
   *    none — restart replayed from scratch) re-delivers a failed batch
-  *    under the same id, and each table's applied-batch watermark skips
-  *    the tables that batch already reached. A partial, overlapping
-  *    fan-out therefore still gives exactly-once effects end-to-end;
+  *    under the same id, and the state table's applied-batch watermark
+  *    skips a batch already folded: exactly-once effects end-to-end;
   *  - the source's own cost per trigger is two file listings, the glob
   *    in `latestOffset` and the new files in `getBatch`. In local mode
   *    [[graft.GraftSession.tune]] makes both driver-side listings, not
   *    Spark jobs; without it each listing of more than 32 paths is a
-  *    job (measured cost in `GraftSession.tune`);
-  *  - batch ids are consistent across all KPI tables by construction
-  *    (single query), which the reference's five independent queries could
-  *    not guarantee.
+  *    job (measured cost in `GraftSession.tune`).
   */
 object KpiStream {
 
-  /** Start the single fan-out query over an airline CSV segment stream.
+  /** Start the single KPI query over an airline CSV segment stream, after
+    * declaring the eight KPI tables as views of the state table in `store`
+    * (a no-op when a previous start on the same store already did; fails
+    * if the store holds other definitions under those names).
     * `availableNow = true` drains all existing files then stops —
     * the test/replay trigger; false = continuous micro-batches. */
   def start(
@@ -62,14 +66,16 @@ object KpiStream {
       store: ParquetKpiStore,
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
+    AirlineKpis.views.foreach { case (table, filter, select) =>
+      store.defineView(spark, table, AirlineKpis.stateTable, filter, select)
+    }
     val stream = Tables.airlineCsvStream(spark, inputGlob, maxFilesPerTrigger)
     val writer = stream.writeStream
       .queryName("graft_kpi_fanout")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runAll(components(spark, batch).map { case (table, updates, keys) =>
-          () => store.merge(spark, table, keys, updates, batchId)
-        })
+        store.merge(spark, AirlineKpis.stateTable, AirlineKpis.stateKeys,
+          components(spark, batch), batchId)
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
      else writer.trigger(Trigger.ProcessingTime("1 second"))).start()
@@ -85,10 +91,13 @@ object KpiStream {
     q.awaitTermination()
   }
 
-  /** Same single-scan fan-out, delivered to a live JDBC database — the
+  /** Same single scan, delivered to a live JDBC database — the
     * reference's actual topology (stream → DB upsert), with additive
     * per-batch components and the store's transactional watermark giving
-    * exactly-once DB state on at-least-once micro-batch delivery. */
+    * exactly-once DB state on at-least-once micro-batch delivery. The
+    * components are split per table ([[AirlineKpis.splitComponents]]) and
+    * merged in one transaction per table, so unlike [[start]], whose one
+    * commit updates every table, a trigger is applied table by table. */
   def startJdbc(
       spark: SparkSession,
       inputGlob: String,
@@ -101,38 +110,20 @@ object KpiStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // sequential: two first merges would race ensureTable into CREATE TABLE graft_applied_batches
-        components(spark, batch).foreach { case (table, updates, keys) =>
-          store.merge(table, keys, updates, batchId)
+        AirlineKpis.splitComponents(components(spark, batch)).foreach {
+          case (table, updates, keys) => store.merge(table, keys, updates, batchId)
         }
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
      else writer.trigger(Trigger.ProcessingTime("1 second"))).start()
   }
 
-  /** Every KPI table's components of `batch` as (table, local DataFrame,
-    * upsert keys): the coalesced batch is aggregated by one fused pass and
-    * its key-bounded result collected once, so the merges fire no job
-    * against the batch. */
-  private def components(
-      spark: SparkSession, batch: DataFrame): Seq[(String, DataFrame, Seq[String])] = {
+  /** `batch`'s fused KPI components as a local DataFrame: the coalesced
+    * batch is aggregated by one fused pass and its key-bounded result
+    * collected once, so the store writes fire no job against the batch. */
+  private def components(spark: SparkSession, batch: DataFrame): DataFrame = {
     val fused = AirlineKpis.fusedComponents(
       batch.coalesce(spark.sparkContext.defaultParallelism))
-    AirlineKpis.splitComponents(
-      spark.createDataFrame(fused.collect().toSeq.asJava, fused.schema))
-  }
-
-  /** Runs every task on a thread of its own and waits for all of them;
-    * only then is the first failure rethrown. The threads are created
-    * per call, so they inherit the calling thread's Spark local
-    * properties: the streaming query's job group (which `stop()`
-    * cancels) and its batch id. */
-  private def runAll(tasks: Seq[() => Unit]): Unit = {
-    val pool = Executors.newFixedThreadPool(tasks.size)
-    try {
-      val done = pool.invokeAll(tasks.map(t => (() => t()): Callable[Unit]).asJava)
-      done.asScala.foreach { f =>
-        try f.get() catch { case e: ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdown()
+    spark.createDataFrame(fused.collect().toSeq.asJava, fused.schema)
   }
 }

@@ -22,16 +22,32 @@ import org.apache.spark.sql.types.StructType
   *    external DBMS targets — `addBatch`/`executeBatch` per partition
   *    instead of per-row round trips.
   *
+  * Views: a name may instead hold a view of another table
+  * ([[ParquetKpiStore.defineView]]): a filter and a projection in SQL
+  * text, kept in the name's `_VIEW` file. Reading a view reads its source
+  * table's current version through them, and a view's applied batch is
+  * its source's, so every view of one table moves with that table's
+  * single pointer swap. Each read resolves the pointer on its own: two
+  * view reads can straddle a commit, one read of the source cannot. The
+  * KPI stream keeps its eight tables this way, as views of one state
+  * table. Views cannot be written to.
+  *
   * Concurrency: [[ParquetKpiStore]] locks per table, not per store.
-  * Merges into different tables run at the same time (the KPI fan-out
-  * starts all of one batch's merges together); merges into the same
-  * table serialize, so each reads the version its predecessor wrote.
-  * Group commits hold every member's lock, and the group's own, taken
-  * in sorted name order so that no two writers can deadlock.
+  * Merges into different tables (say, two streaming views sharing a
+  * store) run at the same time; merges into the same table serialize, so
+  * each reads the version its predecessor wrote. Group commits hold every
+  * member's lock, and the group's own, taken in sorted name order so that
+  * no two writers can deadlock.
   */
 class ParquetKpiStore(root: String) extends Serializable {
 
   @transient private lazy val locks = new ConcurrentHashMap[String, AnyRef]()
+
+  /** Per table, the last version [[read]] resolved and its footer schema.
+    * A published version is never rewritten (the watermark skips its
+    * batch), so its schema is inferred once, not once per read: the eight
+    * KPI views of one state table share one inference per version. */
+  @transient private lazy val schemas = new ConcurrentHashMap[String, (String, StructType)]()
 
   /** Run `body` holding the lock of every name, taken in sorted order. */
   private def locked[A](names: Seq[String])(body: => A): A = {
@@ -44,34 +60,80 @@ class ParquetKpiStore(root: String) extends Serializable {
 
   private def tableDir(table: String) = s"$root/$table"
   private def latestFile(table: String) = new Path(s"$root/$table/_LATEST")
+  private def viewFile(table: String) = new Path(s"$root/$table/_VIEW")
 
   private def fs(spark: SparkSession) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Highest micro-batch id already folded into `table` (-1 if none). */
-  def appliedBatch(spark: SparkSession, table: String): Long = {
+  /** Trimmed contents of a small metadata file (None if absent). */
+  private def readFile(spark: SparkSession, path: Path): Option[String] = {
     val f = fs(spark)
-    if (!f.exists(latestFile(table))) -1L
+    if (!f.exists(path)) None
     else {
-      val in = f.open(latestFile(table))
-      try scala.io.Source.fromInputStream(in).mkString.trim.split(":")(0).toLong
-      finally in.close()
+      val in = f.open(path)
+      try Some(scala.io.Source.fromInputStream(in).mkString.trim) finally in.close()
     }
   }
 
-  private def currentVersionPath(spark: SparkSession, table: String): Option[String] = {
-    val f = fs(spark)
-    if (!f.exists(latestFile(table))) None
-    else {
-      val in = f.open(latestFile(table))
-      val s = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-      Some(s"${tableDir(table)}/v_${s.split(":")(1)}")
+  /** `table`'s view definition as (source, filter, select), if it is a view. */
+  private def viewOf(spark: SparkSession, table: String): Option[(String, String, Seq[String])] =
+    readFile(spark, viewFile(table)).map { s =>
+      val lines = s.split("\n").toSeq
+      (lines(0), lines(1), lines.drop(2))
+    }
+
+  private def requireTable(spark: SparkSession, table: String): Unit =
+    require(!fs(spark).exists(viewFile(table)), s"$table is a view; write to its source table")
+
+  /** Highest micro-batch id already folded into `table` (-1 if none); for
+    * a view, its source's. */
+  def appliedBatch(spark: SparkSession, table: String): Long = viewOf(spark, table) match {
+    case Some((source, _, _)) => appliedBatch(spark, source)
+    case None => readFile(spark, latestFile(table)).fold(-1L)(_.split(":")(0).toLong)
+  }
+
+  private def currentVersionPath(spark: SparkSession, table: String): Option[String] =
+    readFile(spark, latestFile(table)).map(s => s"${tableDir(table)}/v_${s.split(":")(1)}")
+
+  /** Current table contents (empty option if never written). A view reads
+    * its source's current version, filtered and projected. */
+  def read(spark: SparkSession, table: String): Option[DataFrame] = viewOf(spark, table) match {
+    case Some((source, filter, select)) =>
+      read(spark, source).map(_.where(filter).selectExpr(select: _*))
+    case None => currentVersionPath(spark, table).map { vdir =>
+      val (_, schema) = schemas.compute(table, (_, known) =>
+        if (known != null && known._1 == vdir) known else (vdir, spark.read.parquet(vdir).schema))
+      spark.read.schema(schema).parquet(vdir)
     }
   }
 
-  /** Current table contents (empty option if never written). */
-  def read(spark: SparkSession, table: String): Option[DataFrame] =
-    currentVersionPath(spark, table).map(spark.read.parquet(_))
+  /** Declare `table` a view of `source`: [[read]] of `table` returns
+    * `source`'s current version filtered by `filter` and projected by
+    * `select` (SQL text), and [[appliedBatch]] of `table` is `source`'s.
+    * The definition is written to `table`'s `_VIEW` file by atomic rename;
+    * defining the same view again writes nothing. Fails if `table` already
+    * holds a written table, so that a view never hides stored data, and if
+    * it holds a different view definition, so that stored state is never
+    * read under another projection (say, KPI tags renumbered by an edit). */
+  def defineView(
+      spark: SparkSession,
+      table: String,
+      source: String,
+      filter: String,
+      select: Seq[String]): Unit = locked(Seq(table)) {
+    val lines = source +: filter +: select
+    require(table != source, s"view $table cannot read itself")
+    require(select.nonEmpty && lines.forall(l => l.trim.nonEmpty && !l.contains('\n')),
+      s"view $table: source, filter and each select expression must be one non-empty line")
+    require(!fs(spark).exists(latestFile(table)),
+      s"$table already holds a table; it cannot be redefined as a view")
+    val content = lines.mkString("\n")
+    readFile(spark, viewFile(table)) match {
+      case None => writeAtomic(spark, viewFile(table), content)
+      case Some(stored) => require(stored == content.trim, // readFile trims
+        s"$table is already defined as a different view:\n$stored")
+    }
+  }
 
   /** Current table contents read with a known schema. Unlike [[read]],
     * this fires no Spark job: the Parquet footer inference is skipped. */
@@ -90,6 +152,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       keys: Seq[String],
       updates: DataFrame,
       batchId: Long): Unit = locked(Seq(table)) {
+    requireTable(spark, table)
     if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
       val valueCols = updates.columns.filterNot(keys.contains)
       val merged = readAs(spark, table, updates.schema) match {
@@ -121,6 +184,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       keys: Seq[String],
       updates: DataFrame,
       batchId: Long): Unit = locked(Seq(table)) {
+    requireTable(spark, table)
     if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
       val merged = read(spark, table) match {
         case None => updates
@@ -148,6 +212,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       table: String,
       updates: DataFrame,
       batchId: Long)(combine: DataFrame => DataFrame): Unit = locked(Seq(table)) {
+    requireTable(spark, table)
     if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
       val merged = read(spark, table) match {
         case None => updates
@@ -163,7 +228,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       spark: SparkSession, table: String, merged: DataFrame, batchId: Long): Unit = {
     val vdir = s"${tableDir(table)}/v_$batchId"
     merged.write.mode(SaveMode.Overwrite).parquet(vdir)
-    writePointerAtomic(spark, table, s"$batchId:$batchId")
+    writeAtomic(spark, latestFile(table), s"$batchId:$batchId")
     pruneOldVersions(spark, table, batchId)
   }
 
@@ -182,15 +247,8 @@ class ParquetKpiStore(root: String) extends Serializable {
   private def groupManifest(group: String) = new Path(s"$root/_GROUP_$group")
 
   /** Highest batch atomically committed for `group` (-1 if none). */
-  def appliedGroupBatch(spark: SparkSession, group: String): Long = {
-    val f = fs(spark)
-    if (!f.exists(groupManifest(group))) -1L
-    else {
-      val in = f.open(groupManifest(group))
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
+  def appliedGroupBatch(spark: SparkSession, group: String): Long =
+    readFile(spark, groupManifest(group)).fold(-1L)(_.toLong)
 
   /** Read a member table at the group's committed generation (empty
     * option if the group was never committed). NEVER reads a member's
@@ -210,7 +268,7 @@ class ParquetKpiStore(root: String) extends Serializable {
   /** Atomic multi-table additive merge: every `(table, keys, updates)`
     * member folds like [[merge]], but versions land as uncommitted
     * `v_batchId` dirs first and ONE manifest swap
-    * ([[writePointerAtomic]]'s rename discipline on the group file)
+    * ([[writeAtomic]] on the group file)
     * publishes them all. Crash anywhere before the swap: the manifest
     * still names generation n−1, every staged dir is invisible to
     * [[readGrouped]], and the idempotence watermark (now per GROUP,
@@ -223,6 +281,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       batchId: Long): Unit = {
     require(members.nonEmpty, "mergeGroup needs at least one member table")
     groupLocked(group, members.map(_._1)) {
+      members.foreach(m => requireTable(spark, m._1))
       if (batchId > appliedGroupBatch(spark, group)) { // else: idempotent replay
         members.foreach { case (table, keys, updates) =>
           val valueCols = updates.columns.filterNot(keys.contains)
@@ -239,7 +298,7 @@ class ParquetKpiStore(root: String) extends Serializable {
             .parquet(s"${tableDir(table)}/v_$batchId")
         }
         // every member staged — ONE atomic swap commits the generation
-        writeGroupManifestAtomic(spark, group, batchId)
+        writeAtomic(spark, groupManifest(group), batchId.toString)
         members.foreach { case (table, _, _) =>
           pruneOldVersions(spark, table, batchId)
         }
@@ -267,12 +326,13 @@ class ParquetKpiStore(root: String) extends Serializable {
       batchId: Long): Unit = {
     require(members.nonEmpty, "commitGroup needs at least one member table")
     groupLocked(group, members.map(_._1)) {
+      members.foreach(m => requireTable(spark, m._1))
       if (batchId > appliedGroupBatch(spark, group)) { // else: idempotent replay
         members.foreach { case (table, next) =>
           next.write.mode(SaveMode.Overwrite)
             .parquet(s"${tableDir(table)}/v_$batchId")
         }
-        writeGroupManifestAtomic(spark, group, batchId)
+        writeAtomic(spark, groupManifest(group), batchId.toString)
         members.foreach { case (table, _) =>
           pruneOldVersions(spark, table, batchId)
         }
@@ -285,35 +345,11 @@ class ParquetKpiStore(root: String) extends Serializable {
   private def groupLocked[A](group: String, tables: Seq[String])(body: => A): A =
     locked(s"_GROUP_$group" +: tables)(body)
 
-  /** The group manifest swap — same two-path atomic rename as
-    * [[writePointerAtomic]], on the group file. */
-  private def writeGroupManifestAtomic(
-      spark: SparkSession, group: String, batchId: Long): Unit = {
-    val f = fs(spark)
-    val dst = groupManifest(group)
-    val tmp = new Path(s"$root/_GROUP_$group.tmp")
-    val content = batchId.toString
-    if (Option(f.getUri.getScheme).forall(_ == "file")) {
-      val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
-      java.nio.file.Files.createDirectories(tmpNio.getParent)
-      java.nio.file.Files.write(tmpNio, content.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmpNio,
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      val out = f.create(tmp, true)
-      out.write(content.getBytes("UTF-8"))
-      out.close()
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(f.getUri, spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
-
-  /** Atomic pointer swap: write `_LATEST.tmp`, then rename OVER the live
-    * `_LATEST` — a racing reader sees the old pointer or the new one,
-    * never a truncated file (the previous create-overwrite truncated
-    * first; StreamingSpec's hammering reader caught that window).
+  /** Atomic small-file write: write `<path>.tmp`, then rename it OVER
+    * `path` — a racing reader sees the old contents or the new ones, never
+    * a truncated file (the previous create-overwrite truncated first;
+    * StreamingSpec's hammering reader caught that window). Used for every
+    * table's `_LATEST` pointer, the group manifests and view definitions.
     *
     * Two rename paths because Hadoop's is only atomic where the store
     * supports it: on `file://`, `FileContext.rename(OVERWRITE)` is
@@ -321,16 +357,15 @@ class ParquetKpiStore(root: String) extends Serializable {
     * POSIX rename(2) via NIO, bypassing the checksum layer for this one
     * file; on HDFS-like stores the FileContext rename IS the atomic
     * overwriting rename. */
-  private def writePointerAtomic(spark: SparkSession, table: String, content: String): Unit = {
+  private def writeAtomic(spark: SparkSession, path: Path, content: String): Unit = {
     val f = fs(spark)
-    val dst = latestFile(table)
-    val tmp = new Path(s"${tableDir(table)}/_LATEST.tmp")
+    val tmp = new Path(path.getParent, s"${path.getName}.tmp")
     if (Option(f.getUri.getScheme).forall(_ == "file")) {
       val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
       java.nio.file.Files.createDirectories(tmpNio.getParent)
       java.nio.file.Files.write(tmpNio, content.getBytes("UTF-8"))
       java.nio.file.Files.move(tmpNio,
-        java.nio.file.Paths.get(dst.toUri.getPath),
+        java.nio.file.Paths.get(path.toUri.getPath),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } else {
       val out = f.create(tmp, true)
@@ -338,7 +373,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       out.close()
       org.apache.hadoop.fs.FileContext
         .getFileContext(f.getUri, spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        .rename(tmp, path, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
   }
 

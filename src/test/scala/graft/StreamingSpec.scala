@@ -16,6 +16,14 @@ class StreamingSpec extends SparkTestBase {
   private def writeSegments(dir: String, nSegments: Int, rows: Int): Unit =
     AirlineFixture.writeSegments(dir, nSegments, rows)
 
+  /** Every KPI table read from `store` equals its batch transform over `batch`. */
+  private def assertKpis(store: ParquetKpiStore, batch: DataFrame, clue: String): Unit =
+    AirlineKpis.all.foreach { case (table, transform, keys) =>
+      val want = transform(batch).orderBy(keys.map(col): _*).collect().toSeq
+      val got = store.read(batch.sparkSession, table).get.orderBy(keys.map(col): _*).collect().toSeq
+      assert(got == want, s"KPI $table mismatch $clue")
+    }
+
   test("KPI fan-out stream: final store state == batch groupBy on same input") {
     val in = tmpDir("kpi-in"); val cp = tmpDir("kpi-cp"); val st = tmpDir("kpi-store")
     writeSegments(in, 3, 40)
@@ -36,26 +44,28 @@ class StreamingSpec extends SparkTestBase {
   test("KPI fan-out: a merge failing mid-batch replays from the checkpoint to exactly-once state") {
     val in = tmpDir("replay-in"); val cp = tmpDir("replay-cp"); val st = tmpDir("replay-store")
     writeSegments(in, 3, 40)
-    val store = new FailOnceStore(st, "loyalty_by_age", 1L)
+    // the file source takes the oldest file first: batch s reads segment s
+    val t0 = System.currentTimeMillis() - 60000
+    (0 until 3).foreach(s =>
+      new java.io.File(s"$in/segment_$s/part-0.csv").setLastModified(t0 + s * 10000L))
+    val store = new FailOnceStore(st, AirlineKpis.stateTable, 1L)
     def run() = KpiStream.start(spark, s"$in/*", cp, store,
       availableNow = true, maxFilesPerTrigger = Some(1)).awaitTermination()
     val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .exists(_.getMessage == FailOnceStore.Message), err.toString)
-    // the failure surfaced only after the overlapping merges had finished:
-    // every other table holds batch 1, the failed one still batch 0
+    // all or nothing: the failed commit left all eight tables at batch 0,
+    // equal to the batch reference over segment 0 alone
     AirlineKpis.all.foreach { case (table, _, _) =>
-      val want = if (table == "loyalty_by_age") 0L else 1L
-      assert(store.appliedBatch(spark, table) == want, s"$table after the failed batch")
+      assert(store.appliedBatch(spark, table) == 0L, s"$table after the failed batch")
     }
-    run() // restart: batch 1 replays, the watermark skips the folded tables
-    val batch = graft.sources.Tables.airlineCsv(spark, s"$in/*")
-    AirlineKpis.all.foreach { case (table, transform, keys) =>
+    assertKpis(store, graft.sources.Tables.airlineCsv(spark, s"$in/segment_0"),
+      "after the failed batch")
+    run() // restart: batch 1 replays from the checkpoint
+    AirlineKpis.all.foreach { case (table, _, _) =>
       assert(store.appliedBatch(spark, table) == 2L, s"$table after the restart")
-      val want = transform(batch).orderBy(keys.map(col): _*).collect().toSeq
-      val got = store.read(spark, table).get.orderBy(keys.map(col): _*).collect().toSeq
-      assert(got == want, s"KPI $table mismatch after replay")
     }
+    assertKpis(store, graft.sources.Tables.airlineCsv(spark, s"$in/*"), "after replay")
   }
 
   test("KPI fan-out computes each micro-batch once: summed numInputRows == rows landed") {
@@ -69,6 +79,100 @@ class StreamingSpec extends SparkTestBase {
     // every extra evaluation of a batch's source scan adds its rows again
     assert(batches.map(_.numInputRows).sum == 3 * 40L,
       s"numInputRows per batch: ${batches.map(_.numInputRows).toSeq}")
+  }
+
+  test("KPI stream: a tuned trigger fires at most 4 jobs, 2 for the fused aggregate and 2 for the state merge") {
+    val in = tmpDir("tjobs-in")
+    writeSegments(in, 3, 40)
+    val tuned = GraftSession.tune(spark.newSession())
+    val store = new ParquetKpiStore(tmpDir("tjobs-store"))
+    def trigger(p: java.util.Properties) = for {
+      q <- Option(p.getProperty("sql.streaming.queryId"))
+      b <- Option(p.getProperty("streaming.sql.batchId"))
+    } yield s"$q:$b"
+    JobCounter.around(spark.sparkContext)(trigger) { jobs =>
+      val q = KpiStream.start(tuned, s"$in/*", tmpDir("tjobs-cp"), store,
+        availableNow = true, maxFilesPerTrigger = Some(1))
+      q.awaitTermination()
+      jobs.flush()
+      val triggers = q.recentProgress.filter(_.numInputRows > 0).map(p => s"${q.id}:${p.batchId}")
+      assert(triggers.length == 3, q.recentProgress.map(_.numInputRows).toSeq)
+      triggers.foreach { t =>
+        assert(jobs(t) >= 1 && jobs(t) <= 4, s"trigger $t fired ${jobs(t)} jobs: ${jobs.snapshot}")
+      }
+    }
+    assertKpis(store, graft.sources.Tables.airlineCsv(tuned, s"$in/*"), "")
+  }
+
+  test("KPI views: a fresh store reads all eight at one batch; a staged, unswapped version changes none") {
+    val in = tmpDir("kview-in"); val cp = tmpDir("kview-cp"); val st = tmpDir("kview-store")
+    writeSegments(in, 3, 40)
+    KpiStream.runToCompletion(spark, s"$in/*", cp, new ParquetKpiStore(st))
+    val store = new ParquetKpiStore(st) // a fresh store on the same root
+    val state = AirlineKpis.stateTable
+    def reads() = AirlineKpis.all.map { case (table, _, keys) =>
+      store.read(spark, table).get.orderBy(keys.map(col): _*).collect().toSeq
+    }
+    assertKpis(store, graft.sources.Tables.airlineCsv(spark, s"$in/*"), "in a fresh store")
+    val before = reads()
+    val n = store.appliedBatch(spark, state)
+    assert(n == 0L)
+    assert(AirlineKpis.all.map(t => store.appliedBatch(spark, t._1)).toSet == Set(n))
+    AirlineKpis.all.foreach { case (table, _, _) =>
+      assert(new java.io.File(s"$st/$table/_VIEW").exists(), s"$table is not a view")
+      assert(!new java.io.File(s"$st/$table/_LATEST").exists(), s"$table holds its own data")
+    }
+
+    // the crash window: the next version written, its pointer not swapped
+    val bumped = Seq("cnt", "loyal", "ct", "sat").foldLeft(store.read(spark, state).get) {
+      (d, c) => d.withColumn(c, col(c) + 1)
+    }
+    bumped.write.parquet(s"$st/$state/v_${n + 1}")
+    assert(reads() == before, "a staged version changed a KPI read")
+    assert(AirlineKpis.all.map(t => store.appliedBatch(spark, t._1)).toSet == Set(n))
+  }
+
+  test("ParquetKpiStore views read through their source, refuse writes and never shadow a table") {
+    import spark.implicits._
+    val st = tmpDir("view-store")
+    val store = new ParquetKpiStore(st)
+    def defineEven() = store.defineView(spark, "even", "t", "k % 2 = 0", Seq("k", "v * 10 AS v10"))
+    defineEven()
+    assert(store.read(spark, "even").isEmpty)
+    assert(store.appliedBatch(spark, "even") == -1L)
+    store.merge(spark, "t", Seq("k"), Seq((1, 1L), (2, 2L)).toDF("k", "v"), 0L)
+    defineEven() // the same definition again: nothing changes
+    store.merge(spark, "t", Seq("k"), Seq((2, 5L), (4, 1L)).toDF("k", "v"), 1L)
+    assert(store.read(spark, "even").get.orderBy("k").as[(Int, Long)].collect().toSeq ==
+      Seq((2, 70L), (4, 10L)))
+    assert(store.appliedBatch(spark, "even") == 1L)
+    // a changed definition is refused: the stored one stays in force
+    val redefined = intercept[IllegalArgumentException](
+      store.defineView(spark, "even", "t", "k % 2 = 0", Seq("k", "v")))
+    assert(redefined.getMessage.contains("already defined as a different view"),
+      redefined.getMessage)
+    assert(store.read(spark, "even").get.orderBy("k").as[(Int, Long)].collect().toSeq ==
+      Seq((2, 70L), (4, 10L)))
+
+    val upd = Seq((6, 1L)).toDF("k", "v")
+    Seq[() => Unit](
+      () => store.merge(spark, "even", Seq("k"), upd, 2L),
+      () => store.mergeReplace(spark, "even", Seq("k"), upd, 2L),
+      () => store.mergeWith(spark, "even", upd, 2L)(identity),
+      () => store.mergeGroup(spark, "g", Seq(("even", Seq("k"), upd)), 2L),
+      () => store.commitGroup(spark, "g", Seq(("even", upd)), 2L)).foreach { write =>
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage.contains("even is a view"), e.getMessage)
+    }
+    assert(store.appliedGroupBatch(spark, "g") == -1L)
+
+    // a written table never becomes a view, so no stored data is hidden
+    val e = intercept[IllegalArgumentException](
+      store.defineView(spark, "t", "even", "true", Seq("k")))
+    assert(e.getMessage.contains("already holds a table"), e.getMessage)
+    assert(store.read(spark, "t").get.count() == 3L)
+    assert(!new java.io.File(s"$st/t/_VIEW").exists())
+    assert(!new java.io.File(s"$st/even/_VIEW.tmp").exists())
   }
 
   test("K8 streams as components; derived flight-distance mean == batch KPI") {
@@ -105,6 +209,7 @@ class StreamingSpec extends SparkTestBase {
     val store = new ParquetKpiStore(st)
     KpiStream.runToCompletion(spark, s"$in/*", cp, store)
     // two more segments arrive; a new AvailableNow drain folds ONLY them in
+    // (and its start declares the same KPI views over the same store again)
     (2 until 4).foreach { s =>
       val seg = new java.io.File(s"$in/segment_$s"); seg.mkdirs()
       val w = new java.io.PrintWriter(s"$in/segment_$s/part-0.csv")
@@ -196,12 +301,6 @@ class StreamingSpec extends SparkTestBase {
   test("ParquetKpiStore merge resolves an existing table's current version without a Spark job") {
     import spark.implicits._
     val phase = "graft.test.phase"
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(phase)))
-          .foreach(jobs.merge(_, 1, _ + _))
-    }
     def during[A](name: String)(body: => A): A = {
       spark.sparkContext.setLocalProperty(phase, name)
       try body finally spark.sparkContext.setLocalProperty(phase, null)
@@ -217,61 +316,40 @@ class StreamingSpec extends SparkTestBase {
       }
     }
     store.merge(spark, "t", Seq("k"), Seq(("a", 2L)).toDF("k", "Count"), 0L)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    JobCounter.around(spark.sparkContext)(p => Option(p.getProperty(phase))) { jobs =>
       store.merge(spark, "t", Seq("k"), Seq(("a", 3L)).toDF("k", "Count"), 1L)
       // the public read still infers the schema: the listener sees that job
       during("read")(store.read(spark, "t"))
-      // events arrive in order: once this job is seen, every earlier one is
-      during("sentinel")(spark.sparkContext.parallelize(Seq(1), 1).count())
-      val deadline = System.currentTimeMillis() + 30000
-      while (!jobs.containsKey("sentinel") && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      assert(jobs.containsKey("sentinel"), "listener never saw the sentinel job")
-      assert(jobs.getOrDefault("read", 0) >= 1, s"inference job not observed: $jobs")
+      jobs.flush()
+      assert(jobs("read") >= 1, s"inference job not observed: ${jobs.snapshot}")
       assert(resolutions.get() == 2, "merge did not resolve its version through readAs")
-      assert(jobs.getOrDefault("resolve", 0) == 0, s"merge's version read fired jobs: $jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs("resolve") == 0, s"merge's version read fired jobs: ${jobs.snapshot}")
+    }
     assert(store.read(spark, "t").get.as[(String, Long)].collect().toSeq == Seq(("a", 5L)))
   }
 
   test("tuned local session lists a >32-directory segment stream on the driver: no listing jobs") {
     val in = tmpDir("list-in")
     writeSegments(in, 40, 5) // 40 segment directories: over Spark's 32-path job threshold
-    val listingJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinels = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-        if (desc.exists(_.startsWith("Listing leaf files and directories")))
-          listingJobs.incrementAndGet()
-        if (desc.contains("graft.test.sentinel")) sentinels.incrementAndGet()
-      }
-    }
-    // drains the whole stream in one session; returns its listing-job count
-    def drain(session: org.apache.spark.sql.SparkSession, store: ParquetKpiStore): Int = {
-      listingJobs.set(0)
-      val seen = sentinels.get()
-      KpiStream.runToCompletion(session, s"$in/*", tmpDir("list-cp"), store)
-      // listener events arrive in order: once the sentinel is seen, every earlier job is
-      session.sparkContext.setJobDescription("graft.test.sentinel")
-      try session.sparkContext.parallelize(Seq(1), 1).count()
-      finally session.sparkContext.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (sentinels.get() == seen && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(sentinels.get() > seen, "listener never saw the sentinel job")
-      listingJobs.get()
-    }
+    def listing(p: java.util.Properties) =
+      Option(p.getProperty("spark.job.description"))
+        .filter(_.startsWith("Listing leaf files and directories")).map(_ => "listing")
     val tuned = GraftSession.tune(spark.newSession())
     val store = new ParquetKpiStore(tmpDir("list-store"))
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    JobCounter.around(spark.sparkContext)(listing) { jobs =>
+      // drains the whole stream in one session; returns its listing-job count
+      def drain(session: org.apache.spark.sql.SparkSession, store: ParquetKpiStore): Int = {
+        jobs.reset()
+        KpiStream.runToCompletion(session, s"$in/*", tmpDir("list-cp"), store)
+        jobs.flush()
+        jobs("listing")
+      }
       // control: the untuned session lists the glob and the 40-file batch with jobs
       val untunedJobs = drain(spark.newSession(), new ParquetKpiStore(tmpDir("list-store-ctl")))
       assert(untunedJobs >= 1, "control: an untuned session fired no listing job, so this spec cannot fail")
       val tunedJobs = drain(tuned, store)
       assert(tunedJobs == 0, s"tuned session fired $tunedJobs listing jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     val batch = graft.sources.Tables.airlineCsv(tuned, s"$in/*")
     AirlineKpis.all.foreach { case (table, transform, keys) =>
       val want = transform(batch).orderBy(keys.map(col): _*).collect().toSeq
