@@ -222,6 +222,41 @@ class StreamingSpec extends SparkTestBase {
     assert(got == want)
   }
 
+  test("continuous KPI stream: a segment landing mid-second starts its trigger before the next whole second") {
+    val stage = tmpDir("cont-stage"); val in = tmpDir("cont-in")
+    val cp = tmpDir("cont-cp"); val store = new ParquetKpiStore(tmpDir("cont-store"))
+    writeSegments(stage, 2, 40)
+    def land(s: Int): Unit = java.nio.file.Files.move(
+      java.nio.file.Paths.get(s"$stage/segment_$s"), java.nio.file.Paths.get(s"$in/segment_$s"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    land(0)
+    val q = KpiStream.start(spark, s"$in/*", cp, store, availableNow = false)
+    try {
+      def triggers = q.recentProgress.filter(_.numInputRows > 0)
+      def await(batches: Int): Unit = {
+        val deadline = System.currentTimeMillis() + 60000
+        while ((triggers.length < batches ||
+                store.appliedBatch(spark, AirlineKpis.stateTable) < batches - 1) &&
+               q.isActive && System.currentTimeMillis() < deadline) Thread.sleep(10)
+        assert(triggers.length == batches && q.isActive,
+          s"${q.exception} ${q.recentProgress.map(_.numInputRows).toSeq}")
+      }
+      await(1)
+      Thread.sleep(200) // idle: the stream has nothing new to read
+      // land 100 ms after a whole second: a fixed one-second interval would
+      // start the trigger that reads it exactly on the next whole second
+      val nextSecond = (System.currentTimeMillis() / 1000 + 1) * 1000
+      Thread.sleep(nextSecond + 100 - System.currentTimeMillis())
+      land(1)
+      await(2)
+      val started = java.time.Instant.parse(triggers.last.timestamp).toEpochMilli
+      assert(triggers.last.numInputRows == 40L)
+      assert(started < nextSecond + 1000,
+        s"the trigger carrying the segment landed at ${nextSecond + 100} started at $started")
+      assertKpis(store, graft.sources.Tables.airlineCsv(spark, s"$in/*"), "over both segments")
+    } finally q.stop()
+  }
+
   test("ParquetKpiStore merge is idempotent on batch replay") {
     import spark.implicits._
     val st = tmpDir("idem-store")

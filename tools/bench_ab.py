@@ -5,10 +5,13 @@ Each commit is exported with `git archive` into a fresh directory with its
 own build directory, so neither side runs from the working tree. Runs go
 one JVM at a time, with the same seeds on both sides; the parent goes first
 in odd pairs and the change in even ones. After every run the results so far
-are written to `<work>/results_<workload>_trace<t>.json`; at the end each
-metric's median per side, the parent's quartiles, the relative change and
-the pairs the change won are printed, for the run's metrics and for the
-numeric figures of its `perfbench summary` line (as `summary.<name>`).
+are written to `<work>/results_<workload>_trace<t>_<parent>_<change>.json`
+(each commit's first 12 hex digits). A later call with the same commits,
+workload and trace extends that file instead of replacing it, so at the end
+the report covers every pair run for those commits: each metric's median
+per side, the parent's quartiles, the relative change and the pairs the
+change won, for the run's metrics and for the numeric figures of its
+`perfbench summary` line (as `summary.<name>`).
 
     python3 tools/bench_ab.py --parent HEAD~1 --change HEAD \\
         --workload kpi_stream --seeds 6111-6120 [--trace 0] [--work DIR]
@@ -119,6 +122,9 @@ def report(results, directions):
                                              f"{r['failed']}/{r['attempted']} failed")
                          for r in bad)
         print(f"{side}: {len(results[side])} runs, {len(bad)} not clean{': ' + runs if bad else ''}")
+    for r in results["unpaired"]:
+        print(f"unpaired {r['side']} run, seed {r['seed']} (its pair was never run): "
+              + (r.get("error") or f"wall_s={r['metrics'].get('wall_s')}"))
     if not pairs:
         return
     names = sorted(set().union(*(p["metrics"].keys() | c["metrics"].keys() for p, c in pairs)))
@@ -170,10 +176,22 @@ def main():
         bench = json.load(f)
     directions = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
 
-    out = os.path.join(work, f"results_{a.workload}_trace{a.trace}.json")
-    log = os.path.join(work, f"runs_{a.workload}_trace{a.trace}.log")
-    results = {"parent": [], "change": [], "shas": shas}
-    for i, seed in enumerate(seeds_of(a.seeds)):
+    tag = f"{a.workload}_trace{a.trace}_{shas['parent'][:12]}_{shas['change'][:12]}"
+    out = os.path.join(work, f"results_{tag}.json")
+    log = os.path.join(work, f"runs_{tag}.log")
+    results = {"parent": [], "change": [], "unpaired": [], "shas": shas}
+    if os.path.exists(out):
+        with open(out) as f:
+            results = {"unpaired": [], **json.load(f)}
+    # a run whose pair an interrupted call never finished stays on record
+    # but out of the pairs, so later pairs keep their seeds aligned
+    done = min(len(results["parent"]), len(results["change"]))
+    for side in ("parent", "change"):
+        results["unpaired"] += [dict(r, side=side) for r in results[side][done:]]
+        del results[side][done:]
+    if done:
+        print(f"bench_ab: extending {out} ({done} pairs so far)", flush=True)
+    for i, seed in enumerate(seeds_of(a.seeds), start=done):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
             r = run_once(srcs[side], envs[side], a.workload, seed, bench["run_seconds"],
