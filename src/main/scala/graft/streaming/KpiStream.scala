@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import graft.airline.AirlineKpis
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming KPI pipeline: ONE source scan, ONE query and ONE store
   * commit per trigger for all KPI tables — restructuring the reference's
@@ -85,15 +85,12 @@ object KpiStream {
     AirlineKpis.views.foreach { case (table, filter, select) =>
       store.defineView(spark, table, AirlineKpis.stateTable, filter, select)
     }
-    val stream = Tables.airlineCsvStream(spark, inputGlob, maxFilesPerTrigger)
-    val writer = stream.writeStream
-      .queryName("graft_kpi_fanout")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.merge(spark, AirlineKpis.stateTable, AirlineKpis.stateKeys,
-          components(spark, batch), batchId)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    StreamRunner.start(Tables.airlineCsvStream(spark, inputGlob, maxFilesPerTrigger),
+        "graft_kpi_fanout", checkpointDir,
+        StreamRunner.trigger(availableNow, StreamRunner.Eager)) { (batch, batchId) =>
+      store.merge(spark, AirlineKpis.stateTable, AirlineKpis.stateKeys,
+        components(spark, batch), batchId)
+    }
   }
 
   /** Drain-and-stop convenience for tests/replays. */
@@ -120,17 +117,14 @@ object KpiStream {
       checkpointDir: String,
       store: JdbcKpiStore,
       availableNow: Boolean = true): StreamingQuery = {
-    val stream = Tables.airlineCsvStream(spark, inputGlob)
-    val writer = stream.writeStream
-      .queryName("graft_kpi_fanout_jdbc")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // sequential: two first merges would race ensureTable into CREATE TABLE graft_applied_batches
-        AirlineKpis.splitComponents(components(spark, batch)).foreach {
-          case (table, updates, keys) => store.merge(table, keys, updates, batchId)
-        }
+    StreamRunner.start(Tables.airlineCsvStream(spark, inputGlob),
+        "graft_kpi_fanout_jdbc", checkpointDir,
+        StreamRunner.trigger(availableNow, StreamRunner.Eager)) { (batch, batchId) =>
+      // sequential: two first merges would race ensureTable into CREATE TABLE graft_applied_batches
+      AirlineKpis.splitComponents(components(spark, batch)).foreach {
+        case (table, updates, keys) => store.merge(table, keys, updates, batchId)
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    }
   }
 
   /** `batch`'s fused KPI components as a local DataFrame: the coalesced

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import java.io.{BufferedWriter, FileWriter}
 
 /** Text normalization + ordered reconstitution — the Structured-Streaming
@@ -44,16 +44,10 @@ object Reconstitution {
       outFile: String,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val stream = spark.readStream.text(inputGlob)
-    val writer = stream.writeStream
-      .queryName("graft_reconstitute")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendToFile(normalized(batch).orderBy(col("segment")), outFile)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(spark.readStream.text(inputGlob), "graft_reconstitute", checkpointDir,
+        StreamRunner.trigger(availableNow)) { (batch, _) =>
+      appendToFile(normalized(batch).orderBy(col("segment")), outFile)
+    }
   }
 
   /** Distributed form: one normalized, internally ordered file per

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of batch last-touch attribution (`w20` —
   * SparkEntry.w20Attribution): the per-click-day table of (purchases
@@ -191,13 +191,8 @@ object StreamingAttribution {
       checkpointDir: String,
       latenessMicros: Long = StreamingTransitions.DefaultLatenessMicros,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events, latenessMicros).writeStream
-      .queryName("graft_stream_attribution")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(deltaStream(events, latenessMicros), "graft_stream_attribution",
+        checkpointDir, StreamRunner.trigger(availableNow), "update")(applyBatch(store))
   }
 
   /** The attribution report in `w20`'s exact output shape. Fully
@@ -206,7 +201,8 @@ object StreamingAttribution {
     * null exactly as batch. */
   def attributionTable(spark: SparkSession, store: ParquetKpiStore): DataFrame =
     store.readGrouped(spark, group, cellsTable)
-      .getOrElse(spark.emptyDataFrame)
+      .getOrElse(ParquetKpiStore.empty(spark,
+        "click_day BIGINT, purchases BIGINT, lag_sum BIGINT, users BIGINT"))
       .filter(col("purchases") > 0)
       .select(col("click_day"), col("purchases"), col("users"),
         when(col("click_day") >= 0L,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming burstiness — batch `e26`'s ingest-time twin: the
   * per-type Fano factor (index of dispersion of daily counts)
@@ -46,15 +46,10 @@ object StreamingBurstiness {
       store: ParquetKpiStore,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = stream.writeStream
-      .queryName("graft_stream_burstiness")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        store.mergeWith(batch.sparkSession, table, partial(batch), id)(combine)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(stream, "graft_stream_burstiness", checkpointDir,
+        StreamRunner.trigger(availableNow)) { (batch, id) =>
+      store.mergeWith(batch.sparkSession, table, partial(batch), id)(combine)
+    }
   }
 
   /** The per-type dispersion panel in the batch `e26_burstiness`
@@ -74,10 +69,7 @@ object StreamingBurstiness {
               col("_s").cast(dec) * col("_s")).cast("double") /
               (col("n_days").cast(dec) * col("_s")).cast("double")).as("fano"))
           .orderBy(col("event_type"))
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "event_type STRING, n_days BIGINT, mean_daily DOUBLE, fano DOUBLE"))
+      case None => ParquetKpiStore.empty(spark,
+        "event_type STRING, n_days BIGINT, mean_daily DOUBLE, fano DOUBLE")
     }
 }

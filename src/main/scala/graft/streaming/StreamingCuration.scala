@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming curation — the x14 composition (admission gate → LSH
   * near-dup cut → per-source quota) run INCREMENTALLY in one
@@ -51,11 +51,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * adversarial ceiling of a bridge-saturated corpus, not an expected
   * operating point.
   *
-  * Exactly-once: batchId-named markers make full-batch replays no-ops;
-  * the quota snapshot is versioned by batchId and re-read from the
-  * last MARKED batch, so a crash between writes and the marker replays
-  * into the same snapshot version (same contract as
-  * [[StreamingLshDedup]] / ParquetKpiStore). */
+  * Replay: a [[BatchMarkers]] marker is created after the batch's
+  * writes, so the replay of a batch whose marker landed is a no-op. The
+  * quota snapshot is versioned by batchId and re-read from the last
+  * MARKED batch, so a crash between the writes and the marker replays
+  * into the same snapshot version. The admitted rows and the index are
+  * appended, though: after such a crash the replay appends the batch's
+  * admitted docs and bucket rows a second time, so this sink is
+  * at-least-once, not exactly-once (the [[StreamingLshDedup]]
+  * contract). */
 class StreamingCuration(
     stateDir: String,
     outDir: String,
@@ -70,7 +74,7 @@ class StreamingCuration(
   private def fs(spark: SparkSession) =
     new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def marker(batchId: Long) = new Path(s"$stateDir/_applied_$batchId")
+  private val markers = new BatchMarkers(stateDir)
 
   /** Buckets + shingles for a document batch (one pass — the
     * [[StreamingLshDedup]] shape). */
@@ -85,20 +89,9 @@ class StreamingCuration(
         col("bh.band").as("band"), col("bh.bucket").as("bucket"))
   }
 
-  /** Highest batch id whose marker exists — the quota snapshot to read. */
-  private def lastApplied(spark: SparkSession): Option[Long] = {
+  def processBatch(
+      spark: SparkSession, docs: DataFrame, batchId: Long): Unit = markers.once(spark, batchId) {
     val f = fs(spark)
-    val dir = new Path(stateDir)
-    if (!f.exists(dir)) None
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("_applied_") => n.drop("_applied_".length).toLong }
-      .maxOption
-  }
-
-  def processBatch(spark: SparkSession, docs: DataFrame, batchId: Long): Unit = {
-    val f = fs(spark)
-    if (f.exists(marker(batchId))) return // replay after recovery: no-op
     val admitted = TextAnalysis.admissionGate(docs)
       .filter(col("admit"))
       .select(col("doc_id"), col(sourceCol), col("text"))
@@ -130,7 +123,7 @@ class StreamingCuration(
         vsIndex.unionByName(within).distinct().withColumnRenamed("did", "doc_id"),
         Seq("doc_id"), "left_anti")
       // lifetime per-source quota from the last marked snapshot
-      val usedPrev = lastApplied(spark) match {
+      val usedPrev = markers.lastApplied(spark) match {
         case Some(b) => spark.read.parquet(s"$stateDir/quota/$b")
         case None => admitted.select(col(sourceCol), lit(0L).as("used")).limit(0)
       }
@@ -153,7 +146,6 @@ class StreamingCuration(
       // quota starvation must not resurrect a near-duplicate
       buckets.write.mode(SaveMode.Append).parquet(indexPath)
       keep.unpersist()
-      f.create(marker(batchId), true).close()
     } finally { admitted.unpersist(); buckets.unpersist() }
   }
 
@@ -164,14 +156,9 @@ class StreamingCuration(
       docStream: DataFrame,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = docStream.writeStream
-      .queryName("graft_stream_curation")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(docStream, "graft_stream_curation", checkpointDir,
+        StreamRunner.trigger(availableNow)) { (batch, batchId) =>
+      processBatch(spark, batch, batchId)
+    }
   }
 }

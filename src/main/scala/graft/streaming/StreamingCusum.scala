@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of the batch per-user CUSUM changepoint statistic
   * (`e18` — SparkEntry.e18Cusum): s_t = max(0, s_{t−1} + x_t − k) and
@@ -143,13 +143,8 @@ object StreamingCusum {
       k: Double = 55.0,
       latenessMicros: Long = StreamingTransitions.DefaultLatenessMicros,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events, k, latenessMicros).writeStream
-      .queryName("graft_stream_cusum")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(deltaStream(events, k, latenessMicros), "graft_stream_cusum", checkpointDir,
+        StreamRunner.trigger(availableNow), "update")(applyBatch(store))
   }
 
   /** Everything that has arrived, in the batch `e18_cusum` shape. */
@@ -158,8 +153,6 @@ object StreamingCusum {
       .map(_.select(col("user_id"), col("n_events"),
         col("cusum_final"), col("cusum_max"))
         .orderBy(col("user_id")))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, n_events BIGINT, cusum_final DOUBLE, cusum_max DOUBLE")))
+      .getOrElse(ParquetKpiStore.empty(spark,
+        "user_id BIGINT, n_events BIGINT, cusum_final DOUBLE, cusum_max DOUBLE"))
 }

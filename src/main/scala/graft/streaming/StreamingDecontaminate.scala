@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming decontamination: every arriving micro-batch of documents is
   * checked against a STATIC eval/benchmark set before it is admitted to
@@ -18,8 +17,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * contrast with [[StreamingLshDedup]], which grows an index of the
   * stream itself).
   *
-  * Exactly-once: batchId marker files make the flagged-pairs append
-  * idempotent under micro-batch replay. */
+  * Replay: a [[BatchMarkers]] marker is created after the flagged pairs
+  * are appended, so the replay of a batch whose marker landed is a
+  * no-op. A crash after the append and before the marker appends the
+  * batch's pairs again on replay: this sink is at-least-once, not
+  * exactly-once. */
 class StreamingDecontaminate(
     flaggedDir: String,
     k: Int = 3,
@@ -28,16 +30,15 @@ class StreamingDecontaminate(
     threshold: Double = 0.5)
     extends Serializable {
 
-  private def fs(spark: SparkSession) =
-    new Path(flaggedDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def marker(batchId: Long) = new Path(s"$flaggedDir/_applied_$batchId")
+  private val markers = new BatchMarkers(flaggedDir)
 
   /** Flag batch docs leaking eval content; append (id_a = eval doc,
     * id_b = stream doc, jaccard) to `flaggedDir`. */
-  def processBatch(spark: SparkSession, evalSet: DataFrame, batch: DataFrame, batchId: Long): Unit = {
-    val f = fs(spark)
-    if (f.exists(marker(batchId))) return // replay after recovery: no-op
+  def processBatch(
+      spark: SparkSession,
+      evalSet: DataFrame,
+      batch: DataFrame,
+      batchId: Long): Unit = markers.once(spark, batchId) {
     // persistStaged = false: a micro-batch is a fresh plan every trigger,
     // so CacheManager could never dedupe the staged frames — persisting
     // here would leak one cached shingle frame per batch for the
@@ -48,7 +49,6 @@ class StreamingDecontaminate(
         corpus = batch, probes = evalSet, "doc_id", "text",
         threshold, k, numHashes, bands, persistStaged = false)
       .write.mode(SaveMode.Append).parquet(s"$flaggedDir/data")
-    f.create(marker(batchId), true).close()
   }
 
   /** Hook a document stream (columns doc_id, text) to be screened
@@ -60,27 +60,11 @@ class StreamingDecontaminate(
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
     val cachedEval = evalSet.persist()
-    val w = docStream.writeStream
-      .queryName("graft_stream_decontaminate")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, cachedEval, batch, batchId)
-        ()
-      }
-    val query = (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
     // lifecycle: the eval cache lives exactly as long as the query
-    val release = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          cachedEval.unpersist()
-          spark.streams.removeListener(this)
-        }
+    StreamRunner.start(docStream, "graft_stream_decontaminate", checkpointDir,
+        StreamRunner.trigger(availableNow),
+        release = Some(() => cachedEval.unpersist())) { (batch, batchId) =>
+      processBatch(spark, cachedEval, batch, batchId)
     }
-    spark.streams.addListener(release)
-    query
   }
 }

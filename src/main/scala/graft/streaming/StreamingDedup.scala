@@ -4,7 +4,7 @@ import graft.operators.{Dedup, TextAnalysis}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Cross-batch streaming near-duplicate detection: each micro-batch of
   * documents is checked against the ACCUMULATED corpus via the banded
@@ -59,8 +59,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * regime, ~10^5 partitions of 128 MB against a 40k-bucket batch
   * read well under 1% of the index.
   *
-  * Exactly-once: batchId-named marker files make the append idempotent
-  * under micro-batch replay (same contract as ParquetKpiStore). */
+  * Replay: a [[BatchMarkers]] marker is created after the matches,
+  * bucket rows and doc rows are appended, so the replay of a batch whose
+  * marker landed is a no-op. A crash after an append and before the
+  * marker appends the batch again on replay: this sink is at-least-once,
+  * not exactly-once, unlike ParquetKpiStore, whose pointer swap is the
+  * commit. */
 class StreamingLshDedup(
     indexDir: String,
     matchesDir: String,
@@ -74,7 +78,7 @@ class StreamingLshDedup(
   private def fs(spark: SparkSession) =
     new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def marker(batchId: Long) = new Path(s"$indexDir/_applied_$batchId")
+  private val markers = new BatchMarkers(indexDir)
 
   /** On-disk layout version marker. v2 is the r13 split (id-only
     * bucket rows under `data/`, shingles under `docs/`); a pre-v2
@@ -123,7 +127,7 @@ class StreamingLshDedup(
   /** Per-doc staging for a batch — ONE narrow pass producing the
     * shingle set and its minhash signature; callers persist it (every
     * downstream consumer is a narrow derivation). */
-  private[graft] def stagedDocs(docs: DataFrame): DataFrame =
+  private def stagedDocs(docs: DataFrame): DataFrame =
     TextAnalysis.withShingles(
       docs.select(col("doc_id"), col("text")), "text", k)
       .withColumn("_sig", Dedup.minhashSignatureFromShingles(col("_sh"), numHashes))
@@ -131,7 +135,7 @@ class StreamingLshDedup(
   /** Id-only bucket rows (doc_id, band, bucket, _bp) from a staged
     * batch — the shape `data/` stores and the candidate join shuffles;
     * shingle arrays never ride these rows. */
-  private[graft] def bucketRows(staged: DataFrame): DataFrame =
+  private def bucketRows(staged: DataFrame): DataFrame =
     staged
       .select(col("doc_id"),
         explode(Dedup.bandHashes(col("_sig"), numHashes, bands)).as("bh"))
@@ -162,9 +166,9 @@ class StreamingLshDedup(
 
   /** Process one micro-batch: emit (new_doc_id, dup_of_doc_id, jaccard)
     * matches against the accumulated index, then append the batch. */
-  def processBatch(spark: SparkSession, docs: DataFrame, batchId: Long): Unit = {
+  def processBatch(
+      spark: SparkSession, docs: DataFrame, batchId: Long): Unit = markers.once(spark, batchId) {
     val f = fs(spark)
-    if (f.exists(marker(batchId))) return // replay after recovery: no-op
     ensureLayout(spark, f)
     // ONE persisted staging; bucket rows re-derive narrowly from it
     // (an explode over a cached frame is cheaper than a second cache)
@@ -230,7 +234,6 @@ class StreamingLshDedup(
         .partitionBy("_bp").parquet(s"$indexDir/data")
       staged.select(col("doc_id"), col("_sh"))
         .write.mode(SaveMode.Append).parquet(s"$indexDir/docs")
-      f.create(marker(batchId), true).close()
     } finally staged.unpersist()
   }
 
@@ -268,15 +271,10 @@ class StreamingLshDedup(
       docStream: DataFrame,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = docStream.writeStream
-      .queryName("graft_stream_dedup")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(docStream, "graft_stream_dedup", checkpointDir,
+        StreamRunner.trigger(availableNow)) { (batch, batchId) =>
+      processBatch(spark, batch, batchId)
+    }
   }
 }
 

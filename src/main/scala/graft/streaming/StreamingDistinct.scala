@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming per-user distinct-item count — batch `e12`'s END STATE
   * ("unique items to date", final row per user), maintained
@@ -168,13 +168,8 @@ object StreamingDistinct {
       checkpointDir: String,
       maxExactItems: Int = defaultMaxExactItems,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events, maxExactItems).writeStream
-      .queryName("graft_stream_distinct")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(deltaStream(events, maxExactItems), "graft_stream_distinct", checkpointDir,
+        StreamRunner.trigger(availableNow), "update")(applyBatch(store))
   }
 
   /** (user_id, n_distinct, is_approx), the final curve point per
@@ -183,6 +178,7 @@ object StreamingDistinct {
     * the ones that did. */
   def distinctTable(spark: SparkSession, store: ParquetKpiStore): DataFrame =
     store.read(spark, table)
-      .getOrElse(spark.emptyDataFrame)
+      .getOrElse(ParquetKpiStore.empty(spark,
+        "user_id BIGINT, n_distinct BIGINT, is_approx BOOLEAN"))
       .orderBy(col("user_id"))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Evaluation
 
@@ -55,18 +55,13 @@ object StreamingDrift {
       ref.select(Evaluation.psiBinOf(v, boundsCol).as("bin"))
         .groupBy(col("bin")).agg(count(lit(1)).as("n")),
       batchId = 0L)
-    val w = stream.select(v.as(valueCol)).writeStream
-      .queryName("graft_stream_drift")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        store.merge(batch.sparkSession, curTable, Seq("bin"),
-          batch.select(Evaluation.psiBinOf(col(valueCol), boundsCol).as("bin"))
-            .groupBy(col("bin")).agg(count(lit(1)).as("n")),
-          id)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(stream.select(v.as(valueCol)), "graft_stream_drift", checkpointDir,
+        StreamRunner.trigger(availableNow)) { (batch, id) =>
+      store.merge(batch.sparkSession, curTable, Seq("bin"),
+        batch.select(Evaluation.psiBinOf(col(valueCol), boundsCol).as("bin"))
+          .groupBy(col("bin")).agg(count(lit(1)).as("n")),
+        id)
+    }
   }
 
   /** The drift report over everything that has arrived: the complete

@@ -2,10 +2,9 @@ package graft.streaming
 
 import graft.functions.VectorOps
 import graft.operators.Similarity
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming embedding screen — the embedding analogue of
   * [[StreamingDecontaminate]]: every arriving micro-batch of vectors is
@@ -29,8 +28,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   * nlist and skew. With nprobe == nlist the screen is exhaustive
   * (exact); nprobe < nlist trades recall for cost exactly like ivfTopK.
   *
-  * Exactly-once: batchId marker files make the flagged append
-  * idempotent under micro-batch replay.
+  * Replay: a [[BatchMarkers]] marker is created after the flagged rows
+  * are appended, so the replay of a batch whose marker landed is a
+  * no-op. A crash after the append and before the marker appends the
+  * batch's rows again on replay: this sink is at-least-once, not
+  * exactly-once.
   *
   * A reference vector lives in exactly ONE list and a batch row probes
   * `nprobe` DISTINCT lists, so a (ref, stream) pair can surface at most
@@ -42,10 +44,7 @@ class StreamingEmbeddingScreen(
     threshold: Double = 0.9)
     extends Serializable {
 
-  private def fs(spark: SparkSession) =
-    new Path(flaggedDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def marker(batchId: Long) = new Path(s"$flaggedDir/_applied_$batchId")
+  private val markers = new BatchMarkers(flaggedDir)
 
   /** Flag batch vectors near a reference vector; append
     * (ref_id, stream_id, cos) to `flaggedDir`. `refIndex` columns:
@@ -57,9 +56,7 @@ class StreamingEmbeddingScreen(
       batch: DataFrame,
       batchId: Long,
       idCol: String,
-      vecCol: String): Unit = {
-    val f = fs(spark)
-    if (f.exists(marker(batchId))) return // replay after recovery: no-op
+      vecCol: String): Unit = markers.once(spark, batchId) {
     Similarity.ivfProbeLists(batch, cents, idCol, vecCol, nprobe)
       .select(col(idCol).as("stream_id"), col(vecCol).as("_sv"), col("list_id"))
       .join(broadcast(refIndex), Seq("list_id"))
@@ -67,7 +64,6 @@ class StreamingEmbeddingScreen(
       .filter(col("cos") >= threshold)
       .select(col("ref_id"), col("stream_id"), col("cos"))
       .write.mode(SaveMode.Append).parquet(s"$flaggedDir/data")
-    f.create(marker(batchId), true).close()
   }
 
   /** Hook a vector stream (columns idCol, vecCol) to be screened
@@ -87,27 +83,12 @@ class StreamingEmbeddingScreen(
     val refIndex = Similarity.ivfAssignCollected(refSet, cents, idCol, vecCol)
       .select(col(idCol).as("ref_id"), col(vecCol).as("_rv"), col("list_id"))
       .persist()
-    val w = vecStream.writeStream
-      .queryName("graft_stream_embedding_screen")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, cents, refIndex, batch, batchId, idCol, vecCol)
-        ()
-      }
-    val query = (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
     // lifecycle: the index cache lives exactly as long as the query — a
     // session screening many streams must not accumulate dead ref frames
-    val release = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          refIndex.unpersist()
-          spark.streams.removeListener(this)
-        }
+    StreamRunner.start(vecStream, "graft_stream_embedding_screen", checkpointDir,
+        StreamRunner.trigger(availableNow),
+        release = Some(() => refIndex.unpersist())) { (batch, batchId) =>
+      processBatch(spark, cents, refIndex, batch, batchId, idCol, vecCol)
     }
-    spark.streams.addListener(release)
-    query
   }
 }

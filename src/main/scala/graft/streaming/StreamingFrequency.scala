@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.FrequencySketch
 
@@ -59,18 +59,14 @@ object StreamingFrequency {
       hexChars: Int = 3,
       salt: String = "cms",
       availableNow: Boolean = true): StreamingQuery = {
-    val w = itemStream(events).writeStream
-      .queryName("graft_stream_frequency")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store, depth, hexChars, salt) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(itemStream(events), "graft_stream_frequency", checkpointDir,
+        StreamRunner.trigger(availableNow))(applyBatch(store, depth, hexChars, salt))
   }
 
   /** The accumulated counter grid: (d, cell, cnt). */
   def cellsTable(spark: SparkSession, store: ParquetKpiStore): DataFrame =
-    store.read(spark, table).getOrElse(spark.emptyDataFrame)
+    store.read(spark, table)
+      .getOrElse(ParquetKpiStore.empty(spark, "d INT, cell STRING, cnt BIGINT"))
 
   /** Point-query candidate `items` against the accumulated grid —
     * [[FrequencySketch.cmsEstimate]] with matching parameters. */

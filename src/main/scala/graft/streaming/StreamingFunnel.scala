@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of the batch funnel query (`w10` —
   * SparkEntry.w10Funnel): per user, first `view`, first `click` AFTER
@@ -124,21 +124,17 @@ object StreamingFunnel {
       store: ParquetKpiStore,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = funnelStream(events).writeStream
-      .queryName("graft_stream_funnel")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[FunnelRow], batchId: Long) =>
-        store.mergeReplace(batch.sparkSession, table, Seq("user_id"),
-          batch.toDF(), batchId)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(funnelStream(events), "graft_stream_funnel", checkpointDir,
+        StreamRunner.trigger(availableNow), "update") { (batch, batchId) =>
+      store.mergeReplace(batch.sparkSession, table, Seq("user_id"),
+        batch.toDF(), batchId)
+    }
   }
 
   /** The funnel table in `w10`'s exact output shape. */
   def funnelTable(spark: SparkSession, store: ParquetKpiStore): DataFrame =
-    store.read(spark, table).getOrElse(spark.emptyDataFrame)
+    store.read(spark, table).getOrElse(ParquetKpiStore.empty(spark,
+        "user_id BIGINT, t1us BIGINT, t2us BIGINT, t3us BIGINT, steps_reached INT"))
       .select(col("user_id"), col("t1us"), col("t2us"), col("t3us"),
         col("steps_reached"))
       .orderBy(col("user_id"))

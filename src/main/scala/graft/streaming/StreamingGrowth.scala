@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of batch DAU growth accounting (`w21` —
   * SparkEntry.w21GrowthAccounting): the per-day
@@ -131,13 +131,8 @@ object StreamingGrowth {
       store: ParquetKpiStore,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events).writeStream
-      .queryName("graft_stream_growth")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(deltaStream(events), "graft_stream_growth", checkpointDir,
+        StreamRunner.trigger(availableNow), "update")(applyBatch(store))
   }
 
   /** The growth panel in `w21`'s exact output shape: churn capped at
@@ -145,7 +140,9 @@ object StreamingGrowth {
     * (a day can appear with only beyond-horizon churn — batch never
     * emits it). */
   def growthTable(spark: SparkSession, store: ParquetKpiStore): DataFrame = {
-    val cellsDf = store.read(spark, cellsTable).getOrElse(spark.emptyDataFrame)
+    val cellsDf = store.read(spark, cellsTable).getOrElse(ParquetKpiStore.empty(spark,
+      "day BIGINT, dau BIGINT, new_users BIGINT, retained BIGINT, resurrected BIGINT, " +
+        "churned BIGINT"))
     val horizon = store.read(spark, horizonTable)
       .map(_.agg(max(col("max_day")).as("_maxd")))
       .getOrElse(spark.range(1).select(lit(Long.MinValue).as("_maxd")))

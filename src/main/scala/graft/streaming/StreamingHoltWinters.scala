@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of batch additive Holt–Winters (`e28` —
   * SparkEntry.e28HoltWinters): the per-type seasonal forecast
@@ -201,13 +201,8 @@ object StreamingHoltWinters {
       checkpointDir: String,
       latenessDays: Long = 7L,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events, latenessDays).writeStream
-      .queryName("graft_stream_holt_winters")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(deltaStream(events, latenessDays), "graft_stream_holt_winters",
+        checkpointDir, StreamRunner.trigger(availableNow), "update")(applyBatch(store))
   }
 
   /** Everything that has arrived, in the batch `e28_holt_winters`
@@ -217,9 +212,7 @@ object StreamingHoltWinters {
       .map(_.select(col("event_type"), col("n_days"), col("level"),
         col("trend"), col("seasonal_next"), col("forecast_1"))
         .orderBy(col("event_type")))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_type STRING, n_days BIGINT, level DOUBLE, trend DOUBLE, " +
-            "seasonal_next DOUBLE, forecast_1 DOUBLE")))
+      .getOrElse(ParquetKpiStore.empty(spark,
+        "event_type STRING, n_days BIGINT, level DOUBLE, trend DOUBLE, " +
+          "seasonal_next DOUBLE, forecast_1 DOUBLE"))
 }

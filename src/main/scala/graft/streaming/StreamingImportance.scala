@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.operators.Importance
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming DSIR importance scoring — the ingest-time form of
   * [[graft.operators.Importance]]: the quantized log-ratio table is fit
@@ -23,18 +22,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * with [[Importance.importanceScores]] on the same rows, the same
   * guarantee the curation restart spec relies on.
   *
-  * Exactly-once: batchId marker files make the scored append idempotent
-  * under micro-batch replay. */
+  * Replay: a [[BatchMarkers]] marker is created after the scored rows
+  * are appended, so the replay of a batch whose marker landed is a
+  * no-op. A crash after the append and before the marker appends the
+  * batch's rows again on replay: this sink is at-least-once, not
+  * exactly-once. */
 class StreamingImportance(
     scoredDir: String,
     minScoreQ: Long,
     hexChars: Int = 2,
     salt: String = "dsir") extends Serializable {
 
-  private def fs(spark: SparkSession) =
-    new Path(scoredDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def marker(batchId: Long) = new Path(s"$scoredDir/_applied_$batchId")
+  private val markers = new BatchMarkers(scoredDir)
 
   /** Score one batch against the (cached) ratio table and append
     * (doc_id, n_feats, score_q, admit) to `scoredDir`. */
@@ -42,13 +41,10 @@ class StreamingImportance(
       spark: SparkSession,
       ratios: DataFrame,
       batch: DataFrame,
-      batchId: Long): Unit = {
-    val f = fs(spark)
-    if (f.exists(marker(batchId))) return // replay after recovery: no-op
+      batchId: Long): Unit = markers.once(spark, batchId) {
     Importance.importanceScores(batch, "doc_id", "text", ratios, hexChars, salt)
       .withColumn("admit", col("score_q") >= minScoreQ)
       .write.mode(SaveMode.Append).parquet(s"$scoredDir/data")
-    f.create(marker(batchId), true).close()
   }
 
   /** Hook a document stream (columns doc_id, text) to be scored against
@@ -63,27 +59,11 @@ class StreamingImportance(
       availableNow: Boolean = true): StreamingQuery = {
     val cachedRatios =
       Importance.logRatioTable(target, raw, textCol, hexChars, salt).persist()
-    val w = docStream.writeStream
-      .queryName("graft_stream_importance")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, cachedRatios, batch, batchId)
-        ()
-      }
-    val query = (if (availableNow) w.trigger(Trigger.AvailableNow())
-      else w.trigger(Trigger.ProcessingTime("1 second"))).start()
     // lifecycle: the ratio cache lives exactly as long as the query
-    val release = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          cachedRatios.unpersist()
-          spark.streams.removeListener(this)
-        }
+    StreamRunner.start(docStream, "graft_stream_importance", checkpointDir,
+        StreamRunner.trigger(availableNow),
+        release = Some(() => cachedRatios.unpersist())) { (batch, batchId) =>
+      processBatch(spark, cachedRatios, batch, batchId)
     }
-    spark.streams.addListener(release)
-    query
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.RelationalOps
 
@@ -97,31 +97,21 @@ object StreamingMedianMad {
       store: ParquetKpiStore,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = rows.writeStream
-      .queryName("graft_stream_median_mad")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(rows, "graft_stream_median_mad", checkpointDir,
+        StreamRunner.trigger(availableNow))(applyBatch(store))
   }
 
   /** The committed (flag, median_cents, mad_cents) — batch `a47`'s
     * output shape, at the group's generation. */
   def medianMad(spark: SparkSession, store: ParquetKpiStore): DataFrame =
     store.readGrouped(spark, group, resultTable)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "l_returnflag STRING, median_cents BIGINT, mad_cents BIGINT")))
+      .getOrElse(ParquetKpiStore.empty(spark,
+        "l_returnflag STRING, median_cents BIGINT, mad_cents BIGINT"))
       .orderBy(col("l_returnflag"))
 
   /** The committed histogram twin — same generation as [[medianMad]]
     * by the group-manifest read path. */
   def counts(spark: SparkSession, store: ParquetKpiStore): DataFrame =
     store.readGrouped(spark, group, countsTable)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "l_returnflag STRING, cents BIGINT, n BIGINT")))
+      .getOrElse(ParquetKpiStore.empty(spark, "l_returnflag STRING, cents BIGINT, n BIGINT"))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming daily OHLC candles — batch `e15`'s ingest-time twin: the
   * per-(event_type, day) open/high/low/close panel maintained while
@@ -70,15 +70,10 @@ object StreamingOhlc {
       store: ParquetKpiStore,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = stream.writeStream
-      .queryName("graft_stream_ohlc")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        store.mergeWith(batch.sparkSession, table, partial(batch), id)(combine)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(stream, "graft_stream_ohlc", checkpointDir,
+        StreamRunner.trigger(availableNow)) { (batch, id) =>
+      store.mergeWith(batch.sparkSession, table, partial(batch), id)(combine)
+    }
   }
 
   /** Everything that has arrived, in the batch `e15_ohlc` shape; a
@@ -90,11 +85,8 @@ object StreamingOhlc {
         df.select(col("day_idx"), col("event_type"), col("open"), col("high"),
             col("low"), col("close"), col("n_events"))
           .orderBy(col("day_idx"), col("event_type"))
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "day_idx BIGINT, event_type STRING, open DOUBLE, high DOUBLE, " +
-              "low DOUBLE, close DOUBLE, n_events BIGINT"))
+      case None => ParquetKpiStore.empty(spark,
+        "day_idx BIGINT, event_type STRING, open DOUBLE, high DOUBLE, " +
+          "low DOUBLE, close DOUBLE, n_events BIGINT")
     }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of the batch cohort-retention query (`w11` —
   * SparkEntry.w11Retention): users cohort by their FIRST active week
@@ -135,13 +135,8 @@ object StreamingRetention {
       store: ParquetKpiStore,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events).writeStream
-      .queryName("graft_stream_retention")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(deltaStream(events), "graft_stream_retention", checkpointDir,
+        StreamRunner.trigger(availableNow), "update")(applyBatch(store))
   }
 
   /** The retention table in `w11`'s exact output shape, read from the
@@ -153,9 +148,9 @@ object StreamingRetention {
     // grouped reads: both tables resolve through the ONE manifest —
     // the cross-table generation consistency mergeGroup guarantees
     val cells = store.readGrouped(spark, group, cellsTable)
-      .getOrElse(spark.emptyDataFrame)
+      .getOrElse(ParquetKpiStore.empty(spark, "cohort_wk BIGINT, k BIGINT, n_active BIGINT"))
     val sizes = store.readGrouped(spark, group, sizesTable)
-      .getOrElse(spark.emptyDataFrame)
+      .getOrElse(ParquetKpiStore.empty(spark, "cohort_wk BIGINT, cohort_n BIGINT"))
     cells.filter(col("n_active") > 0)
       .join(sizes.filter(col("cohort_n") > 0), Seq("cohort_wk"))
       .select(col("cohort_wk"), col("k").cast("long").as("k"),

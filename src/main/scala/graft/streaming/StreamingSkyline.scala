@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.RelationalOps
 
@@ -54,6 +54,7 @@ object StreamingSkyline {
   private[streaming] val group = "skyline"
   private[streaming] val totalsTable = "sky_totals"
   private[streaming] val frontierTable = "sky_frontier"
+  private val pointDdl = "user_id BIGINT, value_cents BIGINT, n_events BIGINT"
 
   /** Exact per-user (value_cents, n_events) partials for one batch.
     *
@@ -111,26 +112,21 @@ object StreamingSkyline {
       store: ParquetKpiStore,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = events.writeStream
-      .queryName("graft_stream_skyline")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(events, "graft_stream_skyline", checkpointDir,
+        StreamRunner.trigger(availableNow))(applyBatch(store))
   }
 
   /** The committed frontier: (user_id, value_cents, n_events), value
     * descending — every user no other user beats on both dims. */
   def frontier(spark: SparkSession, store: ParquetKpiStore): DataFrame =
     store.readGrouped(spark, group, frontierTable)
-      .getOrElse(spark.emptyDataFrame)
+      .getOrElse(ParquetKpiStore.empty(spark, pointDdl))
       .orderBy(col("value_cents").desc, col("user_id"))
 
   /** The committed totals twin — same generation as [[frontier]] by
     * the group-manifest read path. */
   def totals(spark: SparkSession, store: ParquetKpiStore): DataFrame =
     store.readGrouped(spark, group, totalsTable)
-      .getOrElse(spark.emptyDataFrame)
+      .getOrElse(ParquetKpiStore.empty(spark, pointDdl))
       .orderBy(col("user_id"))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of the batch event-transition matrix (`w12` —
   * SparkEntry.w12Transitions): counts of consecutive event-type pairs
@@ -175,13 +175,8 @@ object StreamingTransitions {
       checkpointDir: String,
       latenessMicros: Long = DefaultLatenessMicros,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events, latenessMicros).writeStream
-      .queryName("graft_stream_transitions")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(deltaStream(events, latenessMicros), "graft_stream_transitions",
+        checkpointDir, StreamRunner.trigger(availableNow), "update")(applyBatch(store))
   }
 
   /** The transition matrix in `w12`'s exact output shape, read from the
@@ -190,7 +185,7 @@ object StreamingTransitions {
   def transitionTable(spark: SparkSession, store: ParquetKpiStore): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = store.read(spark, countsTable)
-      .getOrElse(spark.emptyDataFrame)
+      .getOrElse(ParquetKpiStore.empty(spark, "from_type STRING, to_type STRING, cnt BIGINT"))
     val norm = Window.partitionBy(col("from_type"))
     counts.filter(col("cnt") > 0)
       .select(col("from_type"), col("to_type"), col("cnt"),

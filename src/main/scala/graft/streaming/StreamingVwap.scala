@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming daily VWAP — batch `e22`'s ingest-time twin and the
   * simplest possible member of the COMMUTATIVE-STATE family
@@ -54,19 +54,15 @@ object StreamingVwap {
       store: ParquetKpiStore,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
-    val w = events.writeStream
-      .queryName("graft_stream_vwap")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    StreamRunner.start(events, "graft_stream_vwap", checkpointDir,
+        StreamRunner.trigger(availableNow))(applyBatch(store))
   }
 
   /** The VWAP panel in `e22`'s exact output shape. */
   def vwapTable(spark: SparkSession, store: ParquetKpiStore): DataFrame =
     store.read(spark, table)
-      .getOrElse(spark.emptyDataFrame)
+      .getOrElse(ParquetKpiStore.empty(spark, "event_type STRING, day_idx BIGINT, " +
+        "trades BIGINT, volume BIGINT, pv_cents BIGINT"))
       .select(col("event_type"), col("day_idx"), col("trades"), col("volume"),
         ((col("pv_cents").cast("decimal(38,0)") / lit(100)).cast("double") /
           col("volume").cast("double")).as("vwap"))

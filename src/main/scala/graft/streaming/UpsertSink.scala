@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -12,12 +12,20 @@ import org.apache.spark.sql.types.StructType
   * (reference: src/main/scala/Consumer.scala:152-181 — one JDBC connection
   * per partition per batch, one `executeUpdate` per row).
   *
-  * Two implementations:
+  * Three implementations:
   *  - [[ParquetKpiStore]]: versioned parquet directories with an atomic
-  *    latest-pointer — the test/local sink. Merge is an *additive* fold of
-  *    keyed components (counts/sums), idempotent under micro-batch replay
-  *    via a persisted per-table applied-batch watermark (exactly-once
-  *    effect on at-least-once delivery).
+  *    pointer — the test/local sink. Five write kinds — `merge` (an
+  *    *additive* fold of keyed components: counts, sums), `mergeReplace`,
+  *    `mergeWith`, `mergeGroup` and `commitGroup` — differ only in how
+  *    they build each member's next state. All five commit through one
+  *    private routine: lock the names in sorted order, refuse a view,
+  *    skip a batch at or below the persisted applied-batch watermark,
+  *    stage `v_<batchId>` per member, swap one pointer (`_LATEST` for a
+  *    table, `_GROUP_<group>` for a group), prune old versions. The
+  *    watermark makes replay a no-op and the swap makes a commit
+  *    all-or-nothing: exactly-once effect on at-least-once delivery.
+  *  - [[JdbcKpiStore]]: the same additive, watermarked merge into a live
+  *    database, one driver-side transaction per table and batch.
   *  - [[JdbcUpsertSink]]: batched, pooled-connection keyed upsert for
   *    external DBMS targets — `addBatch`/`executeBatch` per partition
   *    instead of per-row round trips.
@@ -151,21 +159,23 @@ class ParquetKpiStore(root: String) extends Serializable {
       table: String,
       keys: Seq[String],
       updates: DataFrame,
-      batchId: Long): Unit = locked(Seq(table)) {
-    requireTable(spark, table)
-    if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
+      batchId: Long): Unit =
+    commit(spark, None, batchId, Seq(table ->
+      (() => sumByKeys(readAs(spark, table, updates.schema), keys, updates))))
+
+  /** The additive fold shared by [[merge]] and [[mergeGroup]]: `cur` and
+    * `updates` unioned, non-key columns summed per key and cast back to
+    * the updates' types. */
+  private def sumByKeys(
+      cur: Option[DataFrame], keys: Seq[String], updates: DataFrame): DataFrame = cur match {
+    case None => updates
+    case Some(state) =>
       val valueCols = updates.columns.filterNot(keys.contains)
-      val merged = readAs(spark, table, updates.schema) match {
-        case None => updates
-        case Some(cur) =>
-          cur.unionByName(updates)
-            .groupBy(keys.map(col): _*)
-            .agg(valueCols.head -> "sum", valueCols.tail.map(_ -> "sum"): _*)
-            .select(keys.map(col) ++ valueCols.map(c => col(s"sum($c)").cast(
-              updates.schema(c).dataType).as(c)): _*)
-      }
-      writeVersion(spark, table, merged, batchId)
-    }
+      state.unionByName(updates)
+        .groupBy(keys.map(col): _*)
+        .agg(valueCols.head -> "sum", valueCols.tail.map(_ -> "sum"): _*)
+        .select(keys.map(col) ++ valueCols.map(c => col(s"sum($c)").cast(
+          updates.schema(c).dataType).as(c)): _*)
   }
 
   /** Keyed LAST-WRITE-WINS merge: an updated key's row REPLACES the
@@ -183,18 +193,13 @@ class ParquetKpiStore(root: String) extends Serializable {
       table: String,
       keys: Seq[String],
       updates: DataFrame,
-      batchId: Long): Unit = locked(Seq(table)) {
-    requireTable(spark, table)
-    if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
-      val merged = read(spark, table) match {
-        case None => updates
-        case Some(cur) =>
-          cur.join(updates.select(keys.map(col): _*), keys, "left_anti")
-            .unionByName(updates)
-      }
-      writeVersion(spark, table, merged, batchId)
-    }
-  }
+      batchId: Long): Unit =
+    commit(spark, None, batchId, Seq(table -> (() => read(spark, table) match {
+      case None => updates
+      case Some(cur) =>
+        cur.join(updates.select(keys.map(col): _*), keys, "left_anti")
+          .unionByName(updates)
+    })))
 
   /** Keyed ALGEBRAIC merge — the generalization the additive [[merge]]
     * and last-write-wins [[mergeReplace]] are special cases of: the
@@ -211,25 +216,42 @@ class ParquetKpiStore(root: String) extends Serializable {
       spark: SparkSession,
       table: String,
       updates: DataFrame,
-      batchId: Long)(combine: DataFrame => DataFrame): Unit = locked(Seq(table)) {
-    requireTable(spark, table)
-    if (batchId > appliedBatch(spark, table)) { // else: idempotent replay
-      val merged = read(spark, table) match {
-        case None => updates
-        case Some(cur) => combine(cur.unionByName(updates))
-      }
-      writeVersion(spark, table, merged, batchId)
-    }
-  }
+      batchId: Long)(combine: DataFrame => DataFrame): Unit =
+    commit(spark, None, batchId, Seq(table -> (() => read(spark, table) match {
+      case None => updates
+      case Some(cur) => combine(cur.unionByName(updates))
+    })))
 
-  /** Shared version-write tail: new version dir, atomic pointer swap,
-    * GC of superseded versions. */
-  private def writeVersion(
-      spark: SparkSession, table: String, merged: DataFrame, batchId: Long): Unit = {
-    val vdir = s"${tableDir(table)}/v_$batchId"
-    merged.write.mode(SaveMode.Overwrite).parquet(vdir)
-    writeAtomic(spark, latestFile(table), s"$batchId:$batchId")
-    pruneOldVersions(spark, table, batchId)
+  /** The one commit path behind every public write. In order: lock every
+    * name in sorted order (the members, and for a group its manifest,
+    * under the manifest's file name, which no table can have); refuse a
+    * view; skip a batch at or below the applied watermark, so a replay is
+    * a no-op; stage each member's next state, built only now and in
+    * member order, as `v_<batchId>`; swap the one pointer (`_LATEST` for
+    * a table, `_GROUP_<group>` for a group); prune old versions. Nothing
+    * is visible before the swap, so a crash anywhere earlier leaves every
+    * member at the previous batch. */
+  private def commit(
+      spark: SparkSession,
+      group: Option[String],
+      batchId: Long,
+      members: Seq[(String, () => DataFrame)]): Unit = {
+    val tables = members.map(_._1)
+    locked(group.map(g => s"_GROUP_$g").toSeq ++ tables) {
+      tables.foreach(requireTable(spark, _))
+      val (pointer, applied, content) = group match {
+        case None =>
+          (latestFile(tables.head), appliedBatch(spark, tables.head), s"$batchId:$batchId")
+        case Some(g) => (groupManifest(g), appliedGroupBatch(spark, g), batchId.toString)
+      }
+      if (batchId > applied) {
+        members.foreach { case (table, next) =>
+          next().write.mode(SaveMode.Overwrite).parquet(s"${tableDir(table)}/v_$batchId")
+        }
+        writeAtomic(spark, pointer, content)
+        tables.foreach(pruneOldVersions(spark, _, batchId))
+      }
+    }
   }
 
   // ------------------------------------------------------------------
@@ -280,30 +302,9 @@ class ParquetKpiStore(root: String) extends Serializable {
       members: Seq[(String, Seq[String], DataFrame)],
       batchId: Long): Unit = {
     require(members.nonEmpty, "mergeGroup needs at least one member table")
-    groupLocked(group, members.map(_._1)) {
-      members.foreach(m => requireTable(spark, m._1))
-      if (batchId > appliedGroupBatch(spark, group)) { // else: idempotent replay
-        members.foreach { case (table, keys, updates) =>
-          val valueCols = updates.columns.filterNot(keys.contains)
-          val merged = readGrouped(spark, group, table) match {
-            case None => updates
-            case Some(cur) =>
-              cur.unionByName(updates)
-                .groupBy(keys.map(col): _*)
-                .agg(valueCols.head -> "sum", valueCols.tail.map(_ -> "sum"): _*)
-                .select(keys.map(col) ++ valueCols.map(c => col(s"sum($c)").cast(
-                  updates.schema(c).dataType).as(c)): _*)
-          }
-          merged.write.mode(SaveMode.Overwrite)
-            .parquet(s"${tableDir(table)}/v_$batchId")
-        }
-        // every member staged — ONE atomic swap commits the generation
-        writeAtomic(spark, groupManifest(group), batchId.toString)
-        members.foreach { case (table, _, _) =>
-          pruneOldVersions(spark, table, batchId)
-        }
-      }
-    }
+    commit(spark, Some(group), batchId, members.map { case (table, keys, updates) =>
+      table -> (() => sumByKeys(readGrouped(spark, group, table), keys, updates))
+    })
   }
 
   /** Atomic multi-table REPLACE commit — [[mergeGroup]]'s general
@@ -325,25 +326,8 @@ class ParquetKpiStore(root: String) extends Serializable {
       members: Seq[(String, DataFrame)],
       batchId: Long): Unit = {
     require(members.nonEmpty, "commitGroup needs at least one member table")
-    groupLocked(group, members.map(_._1)) {
-      members.foreach(m => requireTable(spark, m._1))
-      if (batchId > appliedGroupBatch(spark, group)) { // else: idempotent replay
-        members.foreach { case (table, next) =>
-          next.write.mode(SaveMode.Overwrite)
-            .parquet(s"${tableDir(table)}/v_$batchId")
-        }
-        writeAtomic(spark, groupManifest(group), batchId.toString)
-        members.foreach { case (table, _) =>
-          pruneOldVersions(spark, table, batchId)
-        }
-      }
-    }
+    commit(spark, Some(group), batchId, members.map { case (table, next) => table -> (() => next) })
   }
-
-  /** A group commit holds its members' locks and the group manifest's
-    * (named as its file, which no table can be). */
-  private def groupLocked[A](group: String, tables: Seq[String])(body: => A): A =
-    locked(s"_GROUP_$group" +: tables)(body)
 
   /** Atomic small-file write: write `<path>.tmp`, then rename it OVER
     * `path` — a racing reader sees the old contents or the new ones, never
@@ -395,6 +379,16 @@ class ParquetKpiStore(root: String) extends Serializable {
       f.delete(new Path(s"${tableDir(table)}/v_$v"), true)
     }
   }
+}
+
+object ParquetKpiStore {
+
+  /** A zero-row frame with the columns of `ddl`: what a read-back returns
+    * in place of a table never written, so a poll before the first batch
+    * is a normal state, not an error, and reads with the columns and
+    * types a drained store reads with. */
+  private[graft] def empty(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType.fromDDL(ddl))
 }
 
 /** Additive, idempotent KPI merge into a live JDBC database — the
